@@ -26,8 +26,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from lotus_spark.cascades.utils import CascadeArgs, learn_filter_thresholds
+from lotus_spark.models.lm import call_distinct
 from lotus_spark.operators import prompts
 from lotus_spark.operators.postprocessors import parse_bool
+from lotus_spark.partitioning import ensure_parallelism
 from lotus_spark.serialization import docs_from_pdf
 from lotus_spark.session import settings
 
@@ -43,7 +45,7 @@ def proxy_score_udf(helper_lm: Any, instruction: str, cols: list[str],
     def _score(batch: pd.DataFrame) -> pd.Series:
         docs = docs_from_pdf(batch, cols, fmt)
         msgs = [prompts.filter_messages(d, instruction, output_tokens) for d in docs]
-        out = helper_lm(msgs, logprobs=True)
+        out = call_distinct(helper_lm, msgs, logprobs=True)
         pos_tok, neg_tok = output_tokens
         scores = []
         for i, ans in enumerate(out.outputs):
@@ -57,6 +59,21 @@ def proxy_score_udf(helper_lm: Any, instruction: str, cols: list[str],
         return pd.Series(scores, index=batch.index)
 
     return _score
+
+
+def _score_frozen(df: DataFrame, helper_lm: Any, instruction: str,
+                  cols: list[str], output_tokens: tuple[str, str],
+                  fmt: str) -> DataFrame:
+    """Proxy-score every row with the helper LM and freeze the result, so
+    calibration, sampling and routing all read one set of scores. A
+    few-partition input is spread first: the checkpoint keeps its layout,
+    so every LM stage downstream of the cascade inherits it."""
+    return ensure_parallelism(df).withColumn(
+        PROXY_SCORE_COL,
+        proxy_score_udf(helper_lm, instruction, cols, output_tokens, fmt)(
+            F.struct(*[F.col(f"`{c}`") for c in cols])
+        ),
+    ).localCheckpoint()
 
 
 def _bucketize(scored: DataFrame, n_q: int) -> DataFrame:
@@ -120,7 +137,7 @@ def _sample_and_learn(
 
     docs = docs_from_pdf(sample_pdf, cols, fmt)
     msgs = [prompts.filter_messages(d, instruction, output_tokens) for d in docs]
-    oracle_out = oracle_lm(msgs, **model_kwargs).outputs
+    oracle_out = call_distinct(oracle_lm, msgs, **model_kwargs).outputs
     labels = np.array([parse_bool(o, default, output_tokens) for o in oracle_out])
 
     cal_sample = (sample_pdf["__bucket"].to_numpy() + 1) / n_q
@@ -154,12 +171,7 @@ def learn_taus_on(train_df: DataFrame, instruction: str, kwargs: dict,
     helper = kwargs.get("helper_lm") or settings.helper_lm
     output_tokens = kwargs.get("output_tokens", ("True", "False"))
     fmt = settings.serialization_format
-    scored = train_df.withColumn(
-        PROXY_SCORE_COL,
-        proxy_score_udf(helper, instr, cols, output_tokens, fmt)(
-            F.struct(*[F.col(f"`{c}`") for c in cols])
-        ),
-    ).localCheckpoint()
+    scored = _score_frozen(train_df, helper, instr, cols, output_tokens, fmt)
     bucketed = _bucketize(scored, cascade_args.cascade_num_calibration_quantiles)
     return _sample_and_learn(
         bucketed, scored.count(), cols, instr, oracle,
@@ -189,12 +201,7 @@ def sem_filter_cascade(
         raise ValueError("filter cascade needs a helper_lm (settings.helper_lm)")
 
     # 1) proxy-score all rows (cheap model), freeze for consistent sampling
-    scored = df.withColumn(
-        PROXY_SCORE_COL,
-        proxy_score_udf(helper, instruction, cols, output_tokens, fmt)(
-            F.struct(*[F.col(f"`{c}`") for c in cols])
-        ),
-    ).localCheckpoint()
+    scored = _score_frozen(df, helper, instruction, cols, output_tokens, fmt)
 
     n_q = cascade_args.cascade_num_calibration_quantiles
     bucketed = _bucketize(scored, n_q)

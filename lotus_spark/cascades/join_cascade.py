@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from lotus_spark.cascades.utils import CascadeArgs, learn_filter_thresholds
 from lotus_spark.functions.vectors import pair_cosine
+from lotus_spark.models.lm import call_distinct
 from lotus_spark.operators import prompts
 from lotus_spark.operators.postprocessors import parse_bool
 from lotus_spark.serialization import docs_from_pdf
@@ -212,7 +213,7 @@ def sem_join_cascade(
         docs = serialize(pdf)
         msgs = [prompts.filter_messages(d, instruction, ("True", "False"))
                 for d in docs]
-        outs = oracle_lm(msgs, **model_kwargs).outputs
+        outs = call_distinct(oracle_lm, msgs, **model_kwargs).outputs
         return [parse_bool(o, False) for o in outs]
 
     strategy = getattr(cascade_args, "join_cascade_strategy", None)
@@ -242,7 +243,7 @@ def sem_join_cascade(
         docs = serialize(batch)
         msgs = [prompts.filter_messages(d, instruction, ("True", "False"))
                 for d in docs]
-        raw = oracle_lm(msgs, **model_kwargs).outputs
+        raw = call_distinct(oracle_lm, msgs, **model_kwargs).outputs
         return pd.DataFrame(
             {
                 "label": [parse_bool(o, False) for o in raw],

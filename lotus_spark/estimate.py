@@ -38,7 +38,9 @@ def estimate_semantic_cost(
 ) -> dict:
     """Estimate LM calls / tokens / (optionally) dollars for a semantic op.
 
-    Exact call counts per op:
+    Upper bounds on the call count per op (identical prompts within one
+    Arrow batch are answered by a single call, ``models.lm.call_distinct``,
+    so repetitive columns cost less):
     - sem_map / sem_filter / sem_extract / judges: one call per row
     - sem_join: one per (left × right) pair (the non-cascade nested loop)
     - sem_agg: ~n / rows-per-fold-batch, geometric tail ≈ ×1.5

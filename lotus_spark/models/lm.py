@@ -19,6 +19,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any, Optional
 
+from lotus_spark.models.cache import cache_key
 
 Messages = list[dict]  # [{"role": "...", "content": "..."}]
 
@@ -211,6 +212,44 @@ class LM:
         ``repr`` whose memory address changes every run)."""
         return (f"{type(self).__qualname__}:{self.model}:"
                 f"{stable_config_token(self)}")
+
+
+def call_distinct(lm: Any, batch: list[Messages], **kwargs: Any) -> LMOutput:
+    """Call ``lm`` once per DISTINCT message list in ``batch``.
+
+    Rows whose messages are identical (keyed by ``cache.cache_key``, the
+    request key ``CachedLM`` looks answers up by) share the answer — and
+    logprobs — of the first such row, as the reference's prompt cache
+    would give them (``lotus/models/lm.py:169-236``); the copies count as
+    ``usage.virtual_calls`` like ``CachedLM`` hits. A sampling call
+    (effective ``temperature`` > 0, from ``kwargs`` or else the LM) is
+    passed through whole: repeated rows there must draw independently.
+
+    The dedup is one ``lm(...)`` call on fewer rows, so caching and
+    rate-limiting wrappers compose unchanged and see only distinct
+    requests. Every semantic operator's batched LM call goes through here.
+    """
+    if (kwargs.get("temperature", getattr(lm, "temperature", 0.0)) or 0) > 0:
+        return lm(batch, **kwargs)
+    model = getattr(lm, "model", "")
+    slot_of: dict[str, int] = {}
+    first: list[int] = []   # batch row of each distinct prompt
+    slots: list[int] = []   # per row: index of its prompt in ``first``
+    for i, msgs in enumerate(batch):
+        key = cache_key(model, msgs, kwargs)
+        j = slot_of.setdefault(key, len(first))
+        if j == len(first):
+            first.append(i)
+        slots.append(j)
+    out = lm([batch[i] for i in first], **kwargs)
+    usage = getattr(lm, "usage", None)
+    if usage is not None:
+        usage.virtual_calls += len(batch) - len(first)
+    logprobs = out.logprobs
+    return LMOutput(
+        outputs=[out.outputs[j] for j in slots],
+        logprobs=None if logprobs is None else [logprobs[j] for j in slots],
+    )
 
 
 # Reasoning models (gpt-5, o-series) spend hidden reasoning tokens from the

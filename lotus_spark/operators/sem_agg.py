@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from lotus_spark.models.lm import call_distinct
 from lotus_spark.nl_expression import nle2str, parse_cols
 from lotus_spark.operators import prompts
 from lotus_spark.operators.sem_map import _resolve_lm
@@ -89,8 +90,9 @@ def _fold_once_msgs(docs: list[str], lm: Any, instruction: str, leaf: bool,
 
 def _fold_once(docs: list[str], lm: Any, instruction: str, leaf: bool,
                strategy: str = "truncate", **kw) -> list[str]:
-    return lm(_fold_once_msgs(docs, lm, instruction, leaf, strategy),
-              **kw).outputs
+    return call_distinct(
+        lm, _fold_once_msgs(docs, lm, instruction, leaf, strategy), **kw
+    ).outputs
 
 
 def _fold_to_one_gen(docs: list[str], lm: Any, instruction: str,
@@ -118,7 +120,7 @@ def fold_to_one(docs: list[str], lm: Any, instruction: str,
             msgs = gen.send(payload)
         except StopIteration as e:
             return e.value
-        payload = lm(msgs, **kw).outputs
+        payload = call_distinct(lm, msgs, **kw).outputs
 
 
 def _lockstep_folds(gens: list, lm: Any, **kw) -> list[str]:
@@ -143,7 +145,7 @@ def _lockstep_folds(gens: list, lm: Any, **kw) -> list[str]:
                 continue
             spans.append((i, len(batch), len(batch) + len(msgs)))
             batch.extend(msgs)
-        outs = lm(batch, **kw).outputs if batch else []
+        outs = call_distinct(lm, batch, **kw).outputs if batch else []
         payload = {i: outs[lo:hi] for i, lo, hi in spans}
     return [results[i] for i in range(len(gens))]
 

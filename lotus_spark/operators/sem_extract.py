@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from lotus_spark.models.lm import call_distinct
 from lotus_spark.operators import prompts
 from lotus_spark.operators.postprocessors import parse_json_fields
 from lotus_spark.operators.sem_map import _resolve_lm
@@ -59,7 +60,7 @@ def sem_extract(
             prompts.extract_messages(d, output_cols, extract_quotes, system_prompt)
             for d in docs
         ]
-        raw = model(msgs, **model_kwargs).outputs
+        raw = call_distinct(model, msgs, **model_kwargs).outputs
         parsed = [parse_json_fields(r, fields) for r in raw]
         data = {f: [p[f] for p in parsed] for f in fields}
         data["__raw"] = raw

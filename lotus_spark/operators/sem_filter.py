@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 
+from lotus_spark.models.lm import call_distinct
 from lotus_spark.nl_expression import nle2str, parse_cols
 from lotus_spark.operators import prompts
 from lotus_spark.operators.postprocessors import parse_bool, split_cot
@@ -59,7 +60,7 @@ def build_filter_udf(
             )
             for d in docs
         ]
-        raw = lm(msgs, **model_kwargs).outputs
+        raw = call_distinct(lm, msgs, **model_kwargs).outputs
         labels = [parse_bool(r, default, output_tokens) for r in raw]
         expl = [split_cot(r).explanation for r in raw]
         return pd.DataFrame({"label": labels, "explanation": expl, "raw": raw})

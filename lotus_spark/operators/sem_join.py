@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lotus_spark.models.lm import call_distinct
 from lotus_spark.nl_expression import nle2str, parse_cols_sided
 from lotus_spark.operators import prompts
 from lotus_spark.operators.postprocessors import parse_bool
@@ -126,7 +127,7 @@ def sem_join(
             prompts.filter_messages(dl + dr, instr, ("True", "False"), None, strategy)
             for dl, dr in zip(docs_l, docs_r)
         ]
-        raw = model(msgs, **model_kwargs).outputs
+        raw = call_distinct(model, msgs, **model_kwargs).outputs
         labels = [parse_bool(r, default) for r in raw]
         expl = [split_cot(r).explanation for r in raw]
         return pd.DataFrame({"label": labels, "explanation": expl, "raw": raw})

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from lotus_spark.models.lm import call_distinct
 from lotus_spark.nl_expression import nle2str, parse_cols
 from lotus_spark.operators import prompts
 from lotus_spark.operators.postprocessors import split_cot
@@ -82,7 +83,7 @@ def build_map_udf(
             prompts.map_messages(d, instruction, examples, strategy, system_prompt)
             for d in docs
         ]
-        raw = lm(msgs, **model_kwargs).outputs
+        raw = call_distinct(lm, msgs, **model_kwargs).outputs
         if postprocessor is not None:
             raw = postprocessor(raw)
         parsed = [split_cot(r) for r in raw]

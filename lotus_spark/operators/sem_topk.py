@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from lotus_spark.models.lm import call_distinct
 from lotus_spark.nl_expression import nle2str, parse_cols
 from lotus_spark.operators import prompts
 from lotus_spark.operators.sem_map import _resolve_lm
@@ -75,7 +76,8 @@ class BatchedComparator:
 
     def _ask(self, lm: Any, pairs: list[tuple[str, str]], logprobs: bool):
         msgs = [prompts.compare_messages(a, b, self.instruction) for a, b in pairs]
-        return lm(msgs, **({"logprobs": True} if logprobs else {}), **self.kw)
+        return call_distinct(
+            lm, msgs, **({"logprobs": True} if logprobs else {}), **self.kw)
 
     def compare(self, pairs: list[tuple[str, str]]) -> list[int]:
         """For each (doc_i, doc_j): 0 if doc_i wins else 1."""

@@ -8,7 +8,7 @@ from lotus_spark.cascades.utils import (
     importance_sampling,
     learn_filter_thresholds,
 )
-from lotus_spark.models import KeywordBoolLM
+from lotus_spark.models import EchoLM, KeywordBoolLM
 
 
 def test_calibrate_monotone():
@@ -205,6 +205,70 @@ def test_filter_cascade_end_to_end_equals_exact(spark):
     assert {r["id"] for r in cascaded.collect()} == {r["id"] for r in exact.collect()}
 
 
+def test_filter_cascade_spreads_one_partition_input(spark, tmp_path):
+    """A one-partition input must not run the cascade's LM stages on one
+    core: the helper is called from several partitions, and so is a
+    sem_map downstream of the cascade (the checkpointed routing keeps
+    the proxy stage's layout). The prewarm path (``learn_taus_on``)
+    scores its train data the same way. Partition ids are recorded in
+    marker files because executor-side calls are invisible to the
+    driver."""
+    import os
+    import uuid
+
+    from pyspark import TaskContext
+
+    from lotus_spark.cascades.filter_cascade import learn_taus_on
+
+    marker_dir = str(tmp_path / "parts")
+    os.makedirs(marker_dir)
+
+    def mark(prefix):
+        part = TaskContext.get().partitionId()
+        open(os.path.join(marker_dir, f"{prefix}-{part}-{uuid.uuid4().hex}"),
+             "w").close()
+
+    class HelperLM(KeywordBoolLM):
+        def __init__(self, keyword, prefix):
+            super().__init__(keyword)
+            self.prefix = prefix
+
+        def __call__(self, batch, **kwargs):
+            mark(self.prefix)
+            return super().__call__(batch, **kwargs)
+
+    class MapLM(EchoLM):
+        def __call__(self, batch, **kwargs):
+            mark("map")
+            return super().__call__(batch, **kwargs)
+
+    rows = [(i, f"doc {i} {'spark' if i % 3 == 0 else 'other'}") for i in range(200)]
+    df = spark.createDataFrame(rows, ["id", "text"]).coalesce(1)
+    assert df.rdd.getNumPartitions() == 1
+    kept = ls.sem_filter(
+        df, "{text} is about distributed computing",
+        lm=KeywordBoolLM("spark"),
+        helper_lm=HelperLM("spark", "helper"),
+        cascade_args=CascadeArgs(),
+    )
+    out = ls.sem_map(kept, "echo {text}", lm=MapLM())
+    assert {r["id"] for r in out.collect()} == set(range(0, 200, 3))
+
+    def partitions(prefix):
+        return {n.split("-")[1] for n in os.listdir(marker_dir)
+                if n.startswith(prefix + "-")}
+
+    assert len(partitions("helper")) >= 2, partitions("helper")
+    assert len(partitions("map")) >= 2, partitions("map")
+
+    learn_taus_on(df, "{text} is about distributed computing", {
+        "cascade_args": CascadeArgs(),
+        "lm": KeywordBoolLM("spark"),
+        "helper_lm": HelperLM("spark", "prewarm"),
+    })
+    assert len(partitions("prewarm")) >= 2, partitions("prewarm")
+
+
 def test_join_cascade_end_to_end(spark):
     from lotus_spark.models.demo_lms import PairKeywordJoinLM
     from lotus_spark.models import HashRM
@@ -286,7 +350,7 @@ def test_join_cascade_size_gate(spark):
     cascade_args is set (reference sem_join.py:761-775)."""
     import lotus_spark as ls
     from lotus_spark.cascades.utils import CascadeArgs
-    from lotus_spark.models import KeywordBoolLM
+    from lotus_spark.models import EchoLM, KeywordBoolLM
 
     left = spark.createDataFrame([("apple",), ("rust",)], ["fruit"])
     right = spark.createDataFrame([("apple pie",), ("steel beam",)], ["dish"])

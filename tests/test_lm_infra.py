@@ -23,6 +23,7 @@ from lotus_spark.models.limits import (
     UsageLimit,
     UsageLimitExceeded,
 )
+from lotus_spark.models.lm import call_distinct
 
 
 def _msgs(text):
@@ -120,6 +121,108 @@ def test_rate_limiter_tpm():
     rl.acquire(n_tokens=90)
     rl.acquire(n_tokens=50)  # must wait for the 90 to age out
     assert t["now"] >= 60.0
+
+
+# ------------------------------------------------------- call_distinct
+def test_call_distinct_copies_outputs_and_logprobs_in_row_order():
+    texts = ["yes a", "no b", "yes a", "no c", "no b", "yes a"]
+    batch = [_msgs(t) for t in texts]
+    per_row = KeywordBoolLM("yes")(batch)
+    lm = KeywordBoolLM("yes")
+    out = call_distinct(lm, batch, logprobs=True)
+    assert out.outputs == per_row.outputs
+    assert out.logprobs == per_row.logprobs
+    # key order inside a message dict does not make a prompt distinct
+    swapped = [{"content": "yes a", "role": "user"}]
+    assert call_distinct(lm, [batch[0], swapped]).outputs == ["True", "True"]
+
+
+def test_call_distinct_usage_counts_distinct_calls_and_all_rows():
+    lm = EchoLM()
+    batch = [_msgs(t) for t in ["a", "b", "a", "a", "c"]]
+    out = call_distinct(lm, batch)
+    assert out.outputs == ["a", "b", "a", "a", "c"]
+    assert out.logprobs is None
+    assert lm.usage.total_calls == 3
+    assert lm.usage.virtual_calls == 5
+
+
+def test_call_distinct_passes_sampling_calls_through():
+    seen = []
+
+    class RecordingLM(EchoLM):
+        def __call__(self, batch, **kwargs):
+            seen.append(batch)
+            return super().__call__(batch, **kwargs)
+
+    batch = [_msgs("a"), _msgs("a")]
+    lm = RecordingLM()
+    call_distinct(lm, batch, temperature=0.7)
+    assert seen[-1] is batch
+    lm.temperature = 0.5
+    call_distinct(lm, batch)
+    assert seen[-1] is batch
+    # an explicit temperature=0 call is deterministic again
+    call_distinct(lm, batch, temperature=0.0)
+    assert seen[-1] == [_msgs("a")]
+    assert lm.usage.total_calls == 5 and lm.usage.virtual_calls == 6
+
+
+def test_call_distinct_composes_with_cached_and_limited_lm():
+    batch = [_msgs(t) for t in ["a", "b", "a", "c", "b"]]
+    inner = EchoLM()
+    cached = CachedLM(inner)
+    assert call_distinct(cached, batch).outputs == ["a", "b", "a", "c", "b"]
+    assert call_distinct(cached, batch).outputs == ["a", "b", "a", "c", "b"]
+    assert inner.usage.total_calls == 3  # the second batch is all hits
+    assert (cached.misses, cached.hits) == (3, 3)
+    assert inner.usage.virtual_calls == 10  # every row of both batches
+
+    class RecordingLimiter:
+        def __init__(self):
+            self.requests = []
+
+        def acquire(self, n_requests=1, n_tokens=0):
+            self.requests.append(n_requests)
+
+    limiter = RecordingLimiter()
+    limited = LimitedLM(EchoLM(), rate_limiter=limiter)
+    assert call_distinct(limited, batch).outputs == ["a", "b", "a", "c", "b"]
+    assert limiter.requests == [3]  # budget charged for distinct requests
+
+
+def test_sem_map_sends_each_distinct_prompt_once_per_batch(spark, tmp_path):
+    """200 rows over 3 languages: each Arrow batch sends the LM at most
+    3 prompts, and every row still gets its own answer. Batch sizes are
+    recorded in marker files (executor-side calls are invisible to the
+    driver's usage counters)."""
+    import os
+    import uuid
+
+    from lotus_spark import sem_map
+    from lotus_spark.models.fake_lm import RegexMapLM
+
+    marker_dir = str(tmp_path / "batches")
+    os.makedirs(marker_dir)
+
+    class BatchMarkingLM(RegexMapLM):
+        def __call__(self, batch, **kwargs):
+            with open(os.path.join(marker_dir, uuid.uuid4().hex), "w") as f:
+                f.write(str(len(batch)))
+            return super().__call__(batch, **kwargs)
+
+    langs = ["en", "de", "fr"]
+    docs = spark.createDataFrame(
+        [(i, langs[i % 3]) for i in range(200)], ["doc_id", "lang"])
+    out = sem_map(docs, "state the language {lang} in uppercase",
+                  lm=BatchMarkingLM(r"\[lang\]: «(\w+)»", "upper"))
+    got = {(r["doc_id"], r["_map"]) for r in out.collect()}
+    assert got == {(i, langs[i % 3].upper()) for i in range(200)}
+    sizes = []
+    for name in os.listdir(marker_dir):
+        with open(os.path.join(marker_dir, name)) as f:
+            sizes.append(int(f.read()))
+    assert sizes and max(sizes) <= 3, sizes
 
 
 # ------------------------------------------------------------ long context
@@ -340,13 +443,15 @@ def test_litellm_client_model_aware_token_defaults():
 def test_answer_cache_pipeline_skips_lm_calls(spark, tmp_path):
     """The composed answer-cache pipeline (the oracle row
     __spark_entry__.q_answer_cache_map) really short-circuits the LM:
-    running sem_map on only the cache MISSES makes exactly one LM call
-    per miss row and ZERO for the cached rows — counted via marker
-    files because executor-side pandas-UDF calls are invisible to
-    driver-side usage counters."""
+    running sem_map on only the cache MISSES sends the LM only miss
+    prompts — exactly one per partition that holds misses, since all
+    misses render one prompt — and ZERO for the cached rows. Counted via
+    marker files named by partition id because executor-side pandas-UDF
+    calls are invisible to driver-side usage counters."""
     import os
     import uuid
 
+    from pyspark import TaskContext
     from pyspark.sql import functions as F
 
     from lotus_spark import sem_map
@@ -362,7 +467,10 @@ def test_answer_cache_pipeline_skips_lm_calls(spark, tmp_path):
             inner = self.fn
 
             def fn(prompt):
-                open(os.path.join(marker_dir, uuid.uuid4().hex), "w").close()
+                part = TaskContext.get().partitionId()
+                name = f"{part}-{uuid.uuid4().hex}"
+                with open(os.path.join(marker_dir, name), "w") as f:
+                    f.write(prompt)
                 return inner(prompt)
 
             self.fn = fn
@@ -383,10 +491,23 @@ def test_answer_cache_pipeline_skips_lm_calls(spark, tmp_path):
         "_map", "answer")
     rows = {(r["doc_id"], r["answer"]) for r in out.collect()}
     assert rows == {(i, "DE") for i in range(40) if i % 2 == 0}
-    # exactly one LM call per MISS row; the 20 cached rows cost zero
-    assert len(os.listdir(marker_dir)) == 20
+    def prompts_sent():
+        out = []
+        for name in os.listdir(marker_dir):
+            with open(os.path.join(marker_dir, name)) as f:
+                out.append(f.read())
+        return out
+
+    # only MISS rows reach the LM, once per partition (the 20 misses
+    # share one prompt, so each batch sends it once); the 20 cached rows
+    # cost zero. A second sem_map pass over the misses would repeat a
+    # partition id, and broken dedup would send several per partition.
+    sent = prompts_sent()
+    parts = {n.split("-")[0] for n in os.listdir(marker_dir)}
+    assert 1 <= len(sent) == len(parts)
+    assert all("«de»" in p and "«en»" not in p for p in sent)
 
     # hit rows carry the cached answers without any LM involvement
     got_hits = {(r["doc_id"], r["answer"]) for r in hits.collect()}
     assert got_hits == {(i, "EN") for i in range(40) if i % 2 == 1}
-    assert len(os.listdir(marker_dir)) == 20  # still 20 — no new calls
+    assert len(prompts_sent()) == len(sent)  # no new calls
