@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lotus_spark.functions.index_commit import _fs_read_json, _fs_write_json
 from lotus_spark.functions.vectors import query_cosine  # noqa: F401
 
 
@@ -557,70 +558,6 @@ def knn_topk_pq(
     )
 
 
-def _fs_write_json(spark, path: str, obj) -> None:
-    """Atomic-ish JSON sidecar write through the Hadoop FS API (works on
-    hdfs:///s3a:// like local): write the new content to a temp sibling,
-    rename any EXISTING sidecar aside to a ``.bak`` sibling (never
-    delete it first — for ``_ivfpq_meta.json`` the old content holds the
-    trained centroids/codebooks, and losing both copies would leave the
-    parquet data unqueryable), install the temp via rename, then drop
-    the backup. A crash can leave the destination missing, but the
-    previous content then still exists at the ``.bak`` sibling — every
-    overwrite is recoverable, and the sidecar is never TRUNCATED
-    mid-json (the failure mode that wedges a consumer on
-    JSONDecodeError). Single point of hardening for every index sidecar
-    (meta, stream high-water)."""
-    import json
-    import uuid
-
-    jvm = spark._jvm
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    token = uuid.uuid4().hex[:8]
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}.tmp-{token}")
-    fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(obj).encode()))
-    finally:
-        out.close()
-    bak = None
-    if fs.exists(dst):
-        bak = jvm.org.apache.hadoop.fs.Path(f"{path}.bak-{token}")
-        if not fs.rename(dst, bak):
-            fs.delete(tmp, False)
-            raise IOError(
-                f"could not move existing sidecar {path} aside — "
-                "aborting without touching it")
-    if not fs.rename(tmp, dst):
-        if bak is not None and not fs.rename(bak, dst):
-            raise IOError(
-                f"could not install sidecar {path} AND the rollback "
-                f"failed — previous content preserved at {bak}")
-        raise IOError(f"could not install sidecar {path}"
-                      + ("; previous content restored" if bak else ""))
-    if bak is not None:
-        fs.delete(bak, False)
-
-
-def _fs_read_json(spark, path: str):
-    """Read a JSON sidecar via the Hadoop FS API; returns None if the
-    file does not exist."""
-    import json
-
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        baos = jvm.java.io.ByteArrayOutputStream()
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 65536, False)
-        return json.loads(bytes(baos.toByteArray()).decode())
-    finally:
-        stream.close()
-
-
 def write_ivfpq_index(
     indexed_df: DataFrame,
     path: str,
@@ -807,99 +744,34 @@ def compact_ivfpq_index(spark, path: str) -> None:
     cost becomes file-open bound, not byte bound). This rewrites the
     index so each cell holds ONE file: hash-repartition by the cell id
     (each cell lands in exactly one task) and re-write the partitioned
-    layout to a sibling directory, copy the sidecars
-    (``_ivfpq_meta.json`` + ``_stream_batches.json`` if present), verify
-    the row count, then swap via two FS renames.
+    layout to a sibling directory, then commit it with the sidecars
+    (``_ivfpq_meta.json`` + ``_stream_batches.json`` if present) carried
+    over. Single-writer; crash window: ``index_commit``'s docstring.
 
-    Single-writer maintenance op: do not run concurrently with an
-    appender (same contract as the appenders themselves). The swap is
-    two renames, not atomic — a crash between them leaves the old index
-    at ``<path>.old`` and the compacted one at ``path`` or ``path``
-    missing with both siblings present; both states are recoverable by
-    hand and the data is never deleted before the new copy is verified.
-
-    CRASHED-STREAM GUARD: a stopped ``streaming/index_sink.py`` feed may
-    have died inside its commit window — epoch files fully renamed into
-    the live cells under their ``batch<id>-`` prefix but the
-    ``_stream_batches.json`` high-water mark not yet advanced. Those
-    rows are UNACKNOWLEDGED: on restart the checkpoint replays the
-    epoch, and the replay's cleanup finds them BY that prefix.
-    Compacting first would rewrite them into prefix-less files (and copy
-    the stale sidecar verbatim), so the replay would find nothing to
-    delete and re-append the whole epoch — duplicating every row and
-    silently breaking exactly-once. This function therefore REFUSES to
-    run while any live file's batch id exceeds the sidecar high-water
-    mark (or exists with no sidecar at all): restart the stream, let it
-    replay and drain (``available_now=True`` suffices), then compact.
+    Refuses to run while a crashed stream's epoch is unacknowledged
+    (``index_commit._assert_no_unacked_stream_epochs``): restart the
+    stream, let it replay and drain (``available_now=True``
+    suffices), then compact.
     """
-    import re as _re
-    import uuid
+    from lotus_spark.functions.index_commit import (
+        STAGED_COMPACT,
+        _assert_no_unacked_stream_epochs,
+        commit_rewrite,
+        sibling,
+    )
 
     stored, centroids, codebooks, cell_col = read_ivfpq_index(spark, path)
-
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def _p(s):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    fs = _p(path).getFileSystem(conf)
-
-    sidecar_meta = _fs_read_json(spark, f"{path}/_stream_batches.json")
-    high_water = -1 if sidecar_meta is None else int(
-        sidecar_meta["last_batch_id"])
-    live = fs.globStatus(_p(f"{path}/*/batch*-*")) or []
-    unacked = sorted({
-        int(m.group(1))
-        for st in live
-        for m in [_re.match(r"batch(\d+)-", st.getPath().getName())]
-        if m and int(m.group(1)) > high_water
-    })
-    if unacked:
-        raise RuntimeError(
-            f"compact_ivfpq_index: live files from stream epoch(s) "
-            f"{unacked} exceed the _stream_batches.json high-water mark "
-            f"({high_water}) — a stream crashed inside its commit window. "
-            "Compacting now would erase the batch<id>- prefixes the "
-            "replay uses for cleanup and the epoch would re-append as "
-            "duplicates. Restart the stream (its replay cleans up and "
-            "re-commits these epochs), drain it, then compact.")
+    _assert_no_unacked_stream_epochs(spark, path, "compact_ivfpq_index")
 
     n_before = stored.count()
-    tmp = f"{path}.compact-{uuid.uuid4().hex[:8]}"
+    tmp = sibling(path, STAGED_COMPACT)
     (
         stored.repartition(F.col(cell_col))
         .write.partitionBy(cell_col).parquet(tmp)
     )
-
-    for sidecar in ("_ivfpq_meta.json", "_stream_batches.json"):
-        src = _p(f"{path}/{sidecar}")
-        if fs.exists(src):
-            jvm.org.apache.hadoop.fs.FileUtil.copy(
-                fs, src, fs, _p(f"{tmp}/{sidecar}"), False, conf)
-
-    n_after = spark.read.parquet(tmp).count()
-    if n_after != n_before:
-        fs.delete(_p(tmp), True)
-        raise RuntimeError(
-            f"compact_ivfpq_index: compacted copy has {n_after} rows, "
-            f"expected {n_before}; original left untouched")
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    if not fs.rename(_p(path), _p(old)):
-        fs.delete(_p(tmp), True)
-        raise RuntimeError(f"compact_ivfpq_index: could not move {path}")
-    if not fs.rename(_p(tmp), _p(path)):
-        if not fs.rename(_p(old), _p(path)):  # roll back
-            raise RuntimeError(
-                f"compact_ivfpq_index: could not install compacted index "
-                f"AND the rollback rename failed — index data is intact at "
-                f"{old} (original) and {tmp} (compacted copy); rename one "
-                f"back to {path} by hand")
-        fs.delete(_p(tmp), True)  # don't leak a full-size duplicate
-        raise RuntimeError(
-            f"compact_ivfpq_index: could not install compacted index; "
-            f"original restored")
-    fs.delete(_p(old), True)
+    commit_rewrite(spark, path, tmp, "compact_ivfpq_index",
+                   expect={"": n_before},
+                   carry=("_ivfpq_meta.json", "_stream_batches.json"))
 
 
 def auto_rerank_k(k: int, join: bool = False) -> int:

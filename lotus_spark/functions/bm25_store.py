@@ -45,10 +45,17 @@ other index in this engine. CDC delete + snapshot upsert live in
 """
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, functions as F
 
+from lotus_spark.functions.index_commit import (
+    STAGED_COMPACT,
+    STAGED_REWRITE,
+    _fs,
+    _fs_read_json,
+    _fs_write_json,
+    commit_rewrite,
+    sibling,
+)
 from lotus_spark.functions.text import tokens
 
 _META = "_bm25_meta.json"
@@ -121,8 +128,6 @@ def write_bm25_index(
     postings.write.partitionBy("bucket").parquet(f"{path}/postings")
     _termdf(postings).write.partitionBy("bucket").parquet(f"{path}/termdf")
     doclens.write.parquet(f"{path}/doclens")
-    from lotus_spark.functions.ann import _fs_write_json
-
     _fs_write_json(df.sparkSession, f"{path}/{_META}", {
         "id_col": id_col, "text_col": text_col,
         "n_buckets": int(n_buckets),
@@ -145,8 +150,6 @@ def write_bm25_index(
 
 
 def read_bm25_meta(spark, path: str) -> dict:
-    from lotus_spark.functions.ann import _fs_read_json
-
     meta = _fs_read_json(spark, f"{path}/{_META}")
     if meta is None:
         raise FileNotFoundError(
@@ -385,8 +388,6 @@ def append_bm25_index(
     increment's ids, then re-run the append — the delete rewrites
     postings/doclens, recomputes termdf from the surviving postings,
     and refreshes the sidecar stats, healing every partial state."""
-    from lotus_spark.functions.ann import _fs_write_json
-
     meta = read_bm25_meta(spark, path)
     text_col = text_col or meta["text_col"]
     id_col = id_col or meta["id_col"]
@@ -413,15 +414,18 @@ def append_bm25_index(
     postings.write.mode("append").partitionBy("bucket") \
         .parquet(f"{path}/postings")
 
-    # termdf rewrite: old + delta, verified, swap-installed
+    # termdf rewrite: old + delta, staged, verified, committed
     merged = (
         spark.read.parquet(f"{path}/termdf")
         .unionByName(_termdf(postings))
         .groupBy("term", "bucket").agg(F.sum("df").alias("df"))
         .select("term", "df", "bucket")
     )
-    _swap_rewrite_table(spark, f"{path}/termdf", merged,
-                        "append_bm25_index")
+    n_terms = merged.count()
+    tmp = sibling(f"{path}/termdf", STAGED_REWRITE)
+    merged.write.partitionBy("bucket").parquet(tmp)
+    commit_rewrite(spark, f"{path}/termdf", tmp, "append_bm25_index",
+                   expect={"": n_terms})
 
     inc_n, inc_t = _corpus_stats(doclens)
     meta["n_docs"] = int(meta["n_docs"]) + inc_n
@@ -436,31 +440,16 @@ def compact_bm25_index(spark, path: str) -> None:
     pathology ``compact_ivfpq_index`` fixes for the vector index.
     Rewrites postings and termdf to ONE file per bucket
     (hash-repartition on the bucket id) and doclens to byte-sized file
-    counts, verifies row counts, swaps the whole directory in with the
-    usual two renames. Single-writer; row sets unchanged (a query
-    answers identically — pinned in tests). Deletes already compact as
-    a side effect, so schedule this only on append-heavy indexes."""
+    counts, then commits the whole directory (crash window:
+    ``index_commit``'s docstring). Single-writer; row sets unchanged (a
+    query answers identically — pinned in tests). Deletes already
+    compact as a side effect, so schedule this only on append-heavy
+    indexes."""
     import math
-    import uuid as _uuid
 
-    from lotus_spark.functions.ann import _fs_write_json
-
-    from lotus_spark.functions.index_cdc import _assert_no_unknown_siblings
-
-    # refuse rather than silently destroy anything co-located (the
-    # whole-dir swap carries only the three tables + sidecar — r12)
-    _assert_no_unknown_siblings(
-        spark, path, ("postings", "termdf", "doclens"), _META,
-        "compact_bm25_index")
     meta = read_bm25_meta(spark, path)
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def p(s):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    fs = p(path).getFileSystem(conf)
-    tmp = f"{path}.compact-{_uuid.uuid4().hex[:8]}"
+    jvm, fs, p = _fs(spark, path)
+    tmp = sibling(path, STAGED_COMPACT)
 
     counts = {}
     for table in ("postings", "termdf"):
@@ -474,60 +463,4 @@ def compact_bm25_index(spark, path: str) -> None:
     dl.repartition(max(1, math.ceil(n_bytes / (128 << 20)))) \
         .write.parquet(f"{tmp}/doclens")
     _fs_write_json(spark, f"{tmp}/{_META}", meta)
-
-    for table in ("postings", "termdf", "doclens"):
-        n_after = spark.read.parquet(f"{tmp}/{table}").count()
-        if n_after != counts[table]:
-            fs.delete(p(tmp), True)
-            raise RuntimeError(
-                f"compact_bm25_index: compacted {table} has {n_after} "
-                f"rows, expected {counts[table]}; original untouched")
-    old = f"{path}.old-{_uuid.uuid4().hex[:8]}"
-    if not fs.rename(p(path), p(old)):
-        fs.delete(p(tmp), True)
-        raise RuntimeError(f"compact_bm25_index: could not move {path}")
-    if not fs.rename(p(tmp), p(path)):
-        if not fs.rename(p(old), p(path)):  # roll back
-            raise RuntimeError(
-                f"compact_bm25_index: could not install compacted index "
-                f"AND the rollback failed — data intact at {old} and "
-                f"{tmp}; rename one back to {path} by hand")
-        fs.delete(p(tmp), True)
-        raise RuntimeError(
-            "compact_bm25_index: could not install compacted index; "
-            "original restored")
-    fs.delete(p(old), True)
-
-
-def _swap_rewrite_table(spark, table_path: str, new_df: DataFrame,
-                        who: str) -> None:
-    """Rewrite ONE parquet table via the verify-then-two-renames
-    discipline every index maintainer here uses."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def p(s):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    fs = p(table_path).getFileSystem(conf)
-    n_want = new_df.count()
-    tmp = f"{table_path}.rw-{uuid.uuid4().hex[:8]}"
-    new_df.write.partitionBy("bucket").parquet(tmp)
-    n_got = spark.read.parquet(tmp).count()
-    if n_got != n_want:
-        fs.delete(p(tmp), True)
-        raise RuntimeError(
-            f"{who}: rewrite has {n_got} rows, expected {n_want}")
-    old = f"{table_path}.old-{uuid.uuid4().hex[:8]}"
-    if not fs.rename(p(table_path), p(old)):
-        fs.delete(p(tmp), True)
-        raise RuntimeError(f"{who}: could not move {table_path}")
-    if not fs.rename(p(tmp), p(table_path)):
-        if not fs.rename(p(old), p(table_path)):
-            raise RuntimeError(
-                f"{who}: install AND rollback failed — data intact at "
-                f"{old} and {tmp}; rename one back to {table_path}")
-        fs.delete(p(tmp), True)
-        raise RuntimeError(f"{who}: could not install rewrite; "
-                           "original restored")
-    fs.delete(p(old), True)
+    commit_rewrite(spark, path, tmp, "compact_bm25_index", expect=counts)

@@ -39,8 +39,6 @@ for exact equality.
 """
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, functions as F
 
 from lotus_spark.functions.dedup import minhash_clusters
@@ -48,6 +46,13 @@ from lotus_spark.functions.dedup_index import (
     neardup_join_index,
     read_minhash_meta,
     write_minhash_index,
+)
+from lotus_spark.functions.index_commit import (
+    STAGED_REWRITE,
+    _fs_read_json,
+    _fs_write_json,
+    commit_rewrite,
+    sibling,
 )
 
 _CMETA = "_cluster_meta.json"
@@ -128,8 +133,6 @@ def build_cluster_index(
     embedding twin (which chose it for the cell-partitioned layout's
     sake) and makes both twins maintenance-safe; the swaps now also
     REFUSE unknown entries rather than dropping them."""
-    from lotus_spark.functions.ann import _fs_write_json
-
     _require_integral_id(corpus, id_col, "build_cluster_index")
     write_minhash_index(corpus, path, text_col, id_col,
                         n_hashes=n_hashes, bands=bands,
@@ -183,7 +186,6 @@ def assign_clusters_against_index(
     once per rep overall. Equality argument in :func:`_merge_assign`."""
     from pyspark import StorageLevel
 
-    from lotus_spark.functions.ann import _fs_read_json
     from lotus_spark.functions.dedup import _rep_edges
 
     meta = read_minhash_meta(spark, path)
@@ -200,7 +202,11 @@ def assign_clusters_against_index(
                                 "assign_clusters_against_index")
 
     while _LINGERING_COLLAPSE_CACHE:  # retire the previous call's park
-        _LINGERING_COLLAPSE_CACHE.pop().unpersist(False)
+        stale = _LINGERING_COLLAPSE_CACHE.pop()
+        try:
+            stale.unpersist(False)
+        except Exception:  # e.g. its session was stopped: just drop it
+            pass
 
     # exact-collapse prefix (the hot-bucket guard) — the same algebra
     # minhash_clusters runs: one aggregate + skew-splittable join, one
@@ -211,24 +217,33 @@ def assign_clusters_against_index(
         grp.withColumnRenamed(text_col, "__gcol"),
         F.col(text_col).eqNullSafe(F.col("__gcol")),
     ).drop("__gcol").persist(StorageLevel.MEMORY_AND_DISK)
-    reps = tagged.filter(F.col(id_col) == F.col("__rep")).drop("__rep")
+    sigd = None
+    try:
+        reps = tagged.filter(F.col(id_col) == F.col("__rep")).drop("__rep")
+        local_edges, sigd = _rep_edges(
+            reps, text_col, id_col, meta["n_hashes"], meta["bands"],
+            meta["shingle_n"], thr)
+        # the probe reuses the rep signature cache _rep_edges pinned —
+        # the shingle→hash fold runs once per rep across self-cluster
+        # AND probe
+        rep_sigs = sigd.select(F.col("__rid").alias(id_col), "minhash")
+        matches = neardup_join_index(
+            spark, path, reps, text_col, id_col, threshold=thr,
+            verify="exact" if corpus_df is not None else "estimate",
+            corpus_df=corpus_df, query_sigs=rep_sigs,
+        ).select(F.col(id_col).alias("__node"),
+                 F.col("match_id").alias("__mid"))
 
-    local_edges, sigd = _rep_edges(
-        reps, text_col, id_col, meta["n_hashes"], meta["bands"],
-        meta["shingle_n"], thr)
-    # the probe reuses the rep signature cache _rep_edges pinned — the
-    # shingle→hash fold runs once per rep across self-cluster AND probe
-    rep_sigs = sigd.select(F.col("__rid").alias(id_col), "minhash")
-    matches = neardup_join_index(
-        spark, path, reps, text_col, id_col, threshold=thr,
-        verify="exact" if corpus_df is not None else "estimate",
-        corpus_df=corpus_df, query_sigs=rep_sigs,
-    ).select(F.col(id_col).alias("__node"),
-             F.col("match_id").alias("__mid"))
-
-    members = tagged.select(F.col(id_col), F.col("__rep").alias("__node"))
-    out = _merge_assign(members, local_edges, matches, cmap,
-                        id_col, cluster_col)
+        members = tagged.select(F.col(id_col),
+                                F.col("__rep").alias("__node"))
+        out = _merge_assign(members, local_edges, matches, cmap,
+                            id_col, cluster_col)
+    except BaseException:
+        # nothing will read the caches: release them, do not park
+        tagged.unpersist(False)
+        if sigd is not None:
+            sigd.unpersist(False)
+        raise
     # the CC inside _merge_assign materialized the edge union, so the
     # signature cache has served all its consumers
     sigd.unpersist(False)
@@ -315,9 +330,9 @@ def apply_cluster_assignments(
 ) -> None:
     """Fold a day's assignment into the persisted map: remap the merged
     corpus clusters (broadcast join over the tiny remap set) and append
-    the increment rows, written to a sibling and swap-installed after a
-    count verify — the narrow-table discipline every maintainer here
-    uses. Compose with ``append_minhash_index(increment)`` so the NEXT
+    the increment rows, staged to a sibling and committed by
+    ``index_commit.commit_rewrite`` (crash window: its docstring).
+    Compose with ``append_minhash_index(increment)`` so the NEXT
     day's probe sees today's docs."""
     _apply_to_map(spark, f"{path}.clusters", assignments, corpus_remap,
                   id_col, cluster_col)
@@ -350,42 +365,13 @@ def _apply_to_map(
             F.col(cluster_col).cast("long").alias("cluster")))
     )
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def p(s):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    fs = p(live).getFileSystem(conf)
-    tmp = f"{live}.rw-{uuid.uuid4().hex[:8]}"
+    tmp = sibling(live, STAGED_REWRITE)
     merged.write.parquet(tmp)
-    n_got = spark.read.parquet(tmp).count()
-    if n_got != n_expected:
-        fs.delete(p(tmp), True)
-        raise RuntimeError(
-            f"apply_cluster_assignments: rewrite has {n_got} rows, "
-            f"expected {n_expected}; map untouched")
     # the threshold sidecar lives INSIDE the map dir — it must ride
     # every whole-dir rewrite or the next assign fails FileNotFoundError
     # (r12 fix: the first apply used to silently drop it)
-    sidecar = p(f"{live}/{_CMETA}")
-    if fs.exists(sidecar):
-        jvm.org.apache.hadoop.fs.FileUtil.copy(
-            fs, sidecar, fs, p(f"{tmp}/{_CMETA}"), False, conf)
-    old_dir = f"{live}.old-{uuid.uuid4().hex[:8]}"
-    if not fs.rename(p(live), p(old_dir)):
-        fs.delete(p(tmp), True)
-        raise RuntimeError(f"apply_cluster_assignments: could not move "
-                           f"{live}")
-    if not fs.rename(p(tmp), p(live)):
-        if not fs.rename(p(old_dir), p(live)):
-            raise RuntimeError(
-                f"apply_cluster_assignments: install AND rollback failed "
-                f"— data intact at {old_dir} and {tmp}")
-        fs.delete(p(tmp), True)
-        raise RuntimeError("apply_cluster_assignments: could not install "
-                           "rewrite; original restored")
-    fs.delete(p(old_dir), True)
+    commit_rewrite(spark, live, tmp, "apply_cluster_assignments",
+                   expect={"": n_expected}, carry=(_CMETA,))
 
 
 def embedding_clusters(
@@ -442,8 +428,7 @@ def build_embedding_cluster_index(
     layout readers scan), with the threshold and column names pinned in
     the map's sidecar."""
     from lotus_spark.functions.ann import (
-        _fs_write_json, ivf_index, pq_index, write_ivfpq_index,
-    )
+        ivf_index, pq_index, write_ivfpq_index)
 
     _require_integral_id(corpus, id_col, "build_embedding_cluster_index")
     indexed, cents = ivf_index(corpus, emb_col, n_cells=n_cells,
@@ -496,7 +481,6 @@ def assign_embedding_clusters_against_index(
     ``embedding_cluster_assign`` oracle row replays the DAILY path —
     IVF probe, per-pair ADC, the finite shortlist, exact rerank — in
     SQL, so the approximation itself is what gets verified."""
-    from lotus_spark.functions.ann import _fs_read_json
     from lotus_spark.functions.dedup_index import embedding_neardup_index
 
     from lotus_spark.functions.dedup import embedding_neardup_pairs

@@ -100,7 +100,7 @@ def write_ngram_index(
     posts.write.mode(mode).parquet(f"{path}/ngrams")
     (posts.groupBy("id").agg(F.count("*").alias("n_ngrams"))
      .write.mode(mode).parquet(f"{path}/sizes"))
-    from lotus_spark.functions.ann import _fs_write_json
+    from lotus_spark.functions.index_commit import _fs_write_json
 
     _fs_write_json(df.sparkSession, f"{path}/{_META}", {
         "ngram_n": int(ngram_n), "id_col": id_col,
@@ -108,7 +108,7 @@ def write_ngram_index(
 
 
 def read_ngram_meta(spark, path: str) -> dict:
-    from lotus_spark.functions.ann import _fs_read_json
+    from lotus_spark.functions.index_commit import _fs_read_json
 
     meta = _fs_read_json(spark, f"{path}/{_META}")
     if meta is None:
@@ -158,65 +158,18 @@ def compact_ngram_index(
     spark, path: str, target_file_bytes: int = 128 << 20,
 ) -> None:
     """Small-files maintenance twin of
-    :func:`~lotus_spark.functions.dedup_index.compact_minhash_index`:
-    every ``append_ngram_index`` adds parquet files to ``ngrams/`` and
-    ``sizes/``, and a long-lived index fragments until scans are
-    file-open bound. Rewrites each table to ``ceil(bytes /
-    target_file_bytes)`` files (repartition — row set unchanged), copies
-    the parameter sidecar, VERIFIES both row counts, then swaps via two
-    FS renames. Same recoverable non-atomic-swap contract: a crash
-    between the renames leaves the old index at ``<path>.old-*`` and
-    data is never deleted before the new copy is verified.
-    Single-writer — do not run concurrently with an appender."""
-    import math
-    import uuid
+    :func:`~lotus_spark.functions.dedup_index.compact_minhash_index`
+    (the same body): every ``append_ngram_index`` adds parquet files to
+    ``ngrams/`` and ``sizes/``, and a long-lived index fragments until
+    scans are file-open bound. Rewrites each table to ``ceil(bytes /
+    target_file_bytes)`` files and commits the rewrite (crash window:
+    ``index_commit``'s docstring). Single-writer — do not run
+    concurrently with an appender."""
+    from lotus_spark.functions.dedup_index import _compact_tables
 
-    from lotus_spark.functions.ann import _fs_write_json
-
-    meta = read_ngram_meta(spark, path)
-
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def _p(s):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    fs = _p(path).getFileSystem(conf)
-    tmp = f"{path}.compact-{uuid.uuid4().hex[:8]}"
-
-    counts = {}
-    for table in ("ngrams", "sizes"):
-        src = f"{path}/{table}"
-        df = spark.read.parquet(src)
-        counts[table] = df.count()
-        n_bytes = fs.getContentSummary(_p(src)).getLength()
-        n_files = max(1, math.ceil(n_bytes / target_file_bytes))
-        df.repartition(n_files).write.parquet(f"{tmp}/{table}")
-    _fs_write_json(spark, f"{tmp}/{_META}", meta)
-
-    for table in ("ngrams", "sizes"):
-        n_after = spark.read.parquet(f"{tmp}/{table}").count()
-        if n_after != counts[table]:
-            fs.delete(_p(tmp), True)
-            raise RuntimeError(
-                f"compact_ngram_index: compacted {table} has {n_after} "
-                f"rows, expected {counts[table]}; original untouched")
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    if not fs.rename(_p(path), _p(old)):
-        fs.delete(_p(tmp), True)
-        raise RuntimeError(f"compact_ngram_index: could not move {path}")
-    if not fs.rename(_p(tmp), _p(path)):
-        if not fs.rename(_p(old), _p(path)):  # roll back
-            raise RuntimeError(
-                f"compact_ngram_index: could not install compacted index "
-                f"AND the rollback rename failed — data intact at {old} "
-                f"(original) and {tmp} (compacted); rename one back to "
-                f"{path} by hand")
-        fs.delete(_p(tmp), True)
-        raise RuntimeError(
-            "compact_ngram_index: could not install compacted index; "
-            "original restored")
-    fs.delete(_p(old), True)
+    _compact_tables(spark, path, ("ngrams", "sizes"), _META,
+                    read_ngram_meta(spark, path), target_file_bytes,
+                    "compact_ngram_index")
 
 
 def contamination_against_index(

@@ -131,7 +131,7 @@ def write_minhash_index(
                             shingle_n)
     buckets.write.mode(mode).parquet(f"{path}/buckets")
     sigs.write.mode(mode).parquet(f"{path}/sigs")
-    from lotus_spark.functions.ann import _fs_write_json
+    from lotus_spark.functions.index_commit import _fs_write_json
 
     _fs_write_json(df.sparkSession, f"{path}/{_META}", {
         "n_hashes": int(n_hashes), "bands": int(bands),
@@ -140,7 +140,7 @@ def write_minhash_index(
 
 
 def read_minhash_meta(spark, path: str) -> dict:
-    from lotus_spark.functions.ann import _fs_read_json
+    from lotus_spark.functions.index_commit import _fs_read_json
 
     meta = _fs_read_json(spark, f"{path}/{_META}")
     if meta is None:
@@ -182,73 +182,51 @@ def compact_minhash_index(
     degrades into thousands of tiny files — scans become file-open
     bound, the same pathology ``compact_ivfpq_index`` fixes for the
     vector index. Rewrites each table to ``ceil(bytes /
-    target_file_bytes)`` files (repartition — row set unchanged),
-    copies the parameter sidecar, VERIFIES both row counts, then swaps
-    via two FS renames. Same recoverable non-atomic-swap contract as
-    ``compact_ivfpq_index``: a crash between the renames leaves the old
-    index at ``<path>.old-*`` and data is never deleted before the new
-    copy is verified. Single-writer: do not run concurrently with an
-    appender or while a ``neardup_matches_stream`` query holds the old
-    files cached (release the cache and restart the probe after)."""
-    import math
-    import uuid
-
-    from lotus_spark.functions.ann import _fs_write_json
-    from lotus_spark.functions.index_cdc import _assert_no_unknown_siblings
-
-    # refuse rather than silently destroy anything co-located in the
-    # index dir (r12 — the whole-dir swap carries only buckets/sigs/meta)
-    _assert_no_unknown_siblings(spark, path, ("buckets", "sigs"), _META,
-                                "compact_minhash_index")
-    meta = read_minhash_meta(spark, path)
-
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def _p(s):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    fs = _p(path).getFileSystem(conf)
-    tmp = f"{path}.compact-{uuid.uuid4().hex[:8]}"
-
-    counts = {}
-    for table in ("buckets", "sigs"):
-        src = f"{path}/{table}"
-        df = spark.read.parquet(src)
-        counts[table] = df.count()
-        n_bytes = fs.getContentSummary(_p(src)).getLength()
-        n_files = max(1, math.ceil(n_bytes / target_file_bytes))
-        df.repartition(n_files).write.parquet(f"{tmp}/{table}")
-    _fs_write_json(spark, f"{tmp}/{_META}", meta)
-
-    for table in ("buckets", "sigs"):
-        n_after = spark.read.parquet(f"{tmp}/{table}").count()
-        if n_after != counts[table]:
-            fs.delete(_p(tmp), True)
-            raise RuntimeError(
-                f"compact_minhash_index: compacted {table} has {n_after} "
-                f"rows, expected {counts[table]}; original untouched")
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    if not fs.rename(_p(path), _p(old)):
-        fs.delete(_p(tmp), True)
-        raise RuntimeError(f"compact_minhash_index: could not move {path}")
-    if not fs.rename(_p(tmp), _p(path)):
-        if not fs.rename(_p(old), _p(path)):  # roll back
-            raise RuntimeError(
-                f"compact_minhash_index: could not install compacted index "
-                f"AND the rollback rename failed — data intact at {old} "
-                f"(original) and {tmp} (compacted); rename one back to "
-                f"{path} by hand")
-        fs.delete(_p(tmp), True)
-        raise RuntimeError(
-            "compact_minhash_index: could not install compacted index; "
-            "original restored")
-    fs.delete(_p(old), True)
+    target_file_bytes)`` files (repartition — row set unchanged) and
+    commits the rewrite (crash window: ``index_commit``'s docstring).
+    Single-writer: do not run concurrently with an appender or while a
+    ``neardup_matches_stream`` query holds the old files cached (release
+    the cache and restart the probe after)."""
+    _compact_tables(spark, path, ("buckets", "sigs"), _META,
+                    read_minhash_meta(spark, path), target_file_bytes,
+                    "compact_minhash_index")
     # a neardup_matches_stream cache for this path snapshots the OLD
     # files (now deleted) — drop it so a probe set up after compaction
     # in the same process reads the swapped-in index instead of dead
     # persisted frames
     release_stream_index_cache(path)
+
+
+def _compact_tables(
+    spark, path: str, tables: tuple[str, ...], meta_name: str, meta: dict,
+    target_file_bytes: int, who: str,
+) -> None:
+    """Shared body of the narrow-table compactions (``compact_minhash_
+    index``, ``decontam_index.compact_ngram_index``): stage every table
+    at ``ceil(bytes / target_file_bytes)`` files plus the sidecar, then
+    ``commit_rewrite`` it."""
+    import math
+
+    from lotus_spark.functions.index_commit import (
+        STAGED_COMPACT,
+        _fs,
+        _fs_write_json,
+        commit_rewrite,
+        sibling,
+    )
+
+    jvm, fs, p = _fs(spark, path)
+    tmp = sibling(path, STAGED_COMPACT)
+    counts = {}
+    for table in tables:
+        src = f"{path}/{table}"
+        df = spark.read.parquet(src)
+        counts[table] = df.count()
+        n_bytes = fs.getContentSummary(p(src)).getLength()
+        n_files = max(1, math.ceil(n_bytes / target_file_bytes))
+        df.repartition(n_files).write.parquet(f"{tmp}/{table}")
+    _fs_write_json(spark, f"{tmp}/{meta_name}", meta)
+    commit_rewrite(spark, path, tmp, who, expect=counts)
 
 
 def neardup_join_index(
@@ -555,9 +533,8 @@ def embedding_neardup_index(
     cluster-assign batch-equality contract) raise it instead of
     dropping to ``ann_join_ivfpq`` directly. The MinHash index is the
     text twin with the same write/append/probe lifecycle."""
-    from lotus_spark.functions.ann import (
-        _fs_read_json, ann_join_ivfpq, read_ivfpq_index,
-    )
+    from lotus_spark.functions.ann import ann_join_ivfpq, read_ivfpq_index
+    from lotus_spark.functions.index_commit import _fs_read_json
 
     if rerank_k is None:
         raise ValueError(

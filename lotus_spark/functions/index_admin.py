@@ -17,7 +17,10 @@ narrow-column aggregates — never a full-payload scan):
   siblings (``.cdcold-*`` / ``.cdcdel-*`` / ``.compact-*`` / ``.old-*``
   / ``.rw-*`` — evidence of a crashed swap, with the recovery named);
   unknown co-located entries (the whole-dir swaps refuse them; see
-  ``index_cdc._assert_no_unknown_siblings``).
+  ``index_commit._assert_no_unknown_siblings``). The leftover names
+  are ``index_commit.LEFTOVER_PREFIXES``; the leftover check runs even
+  when the index directory itself is missing (a crash between the
+  commit's two renames).
 - minhash: ``sigs`` ids unique; ``buckets`` rows == bands x sigs rows;
   the two tables cover the same id set.
 - ivfpq: unacked stream epochs (``_stream_batches.json`` high-water);
@@ -38,11 +41,18 @@ from typing import Any
 
 from pyspark.sql import functions as F
 
+from lotus_spark.functions.index_commit import (
+    LEFTOVER_PREFIXES,
+    _assert_no_unacked_stream_epochs,
+    _fs,
+    _fs_read_json,
+    unknown_siblings,
+)
+
 KINDS = ("minhash", "ivfpq", "ngram", "bm25", "cluster",
          "embedding_cluster")
 
-_LEFTOVER_GLOBS = (".cdcold-*", ".cdcdel-*", ".compact-*", ".old-*",
-                   ".rw-*")
+_LEFTOVER_GLOBS = tuple(f"{s}*" for s in LEFTOVER_PREFIXES)
 
 
 def _row(check: str, ok: bool, detail: str = "") -> dict:
@@ -50,8 +60,6 @@ def _row(check: str, ok: bool, detail: str = "") -> dict:
 
 
 def _sibling_leftovers(spark, path: str) -> list[str]:
-    from lotus_spark.functions.index_cdc import _fs
-
     jvm, fs, p = _fs(spark, path)
     found: list[str] = []
     for g in _LEFTOVER_GLOBS:
@@ -66,22 +74,10 @@ def _check_layout(spark, path: str, tables: tuple[str, ...],
                   meta_name: str, rows: list[dict]) -> dict | None:
     """Shared sidecar/leftover/unknown-sibling checks; returns the
     parsed sidecar (or None, with a failed row recorded)."""
-    from lotus_spark.functions.ann import _fs_read_json
-    from lotus_spark.functions.index_cdc import _fs
-
     jvm, fs, p = _fs(spark, path)
-    if not fs.exists(p(path)):
-        rows.append(_row("exists", False, f"no directory at {path}"))
-        return None
-    rows.append(_row("exists", True))
-    meta = _fs_read_json(spark, f"{path}/{meta_name}")
-    rows.append(_row(
-        "sidecar", meta is not None,
-        "" if meta is not None else f"missing {meta_name}"))
-    for t in tables:
-        present = fs.exists(p(f"{path}/{t}"))
-        rows.append(_row(f"table:{t}", present,
-                         "" if present else "table directory missing"))
+    exists = fs.exists(p(path))
+    rows.append(_row("exists", exists,
+                     "" if exists else f"no directory at {path}"))
     left = _sibling_leftovers(spark, path)
     rows.append(_row(
         "no_crashed_swap_leftovers", not left,
@@ -90,13 +86,17 @@ def _check_layout(spark, path: str, tables: tuple[str, ...],
             "recover per the owning verb's docstring (rename the .old-* "
             "aside back, or finish installing the staged rewrite) "
             "before running maintenance")))
-    known = set(tables) | {meta_name}
-    extras = [
-        st.getPath().getName()
-        for st in (fs.listStatus(p(path)) or [])
-        if st.getPath().getName() not in known
-        and not st.getPath().getName().startswith(("_", "."))
-    ]
+    if not exists:
+        return None
+    meta = _fs_read_json(spark, f"{path}/{meta_name}")
+    rows.append(_row(
+        "sidecar", meta is not None,
+        "" if meta is not None else f"missing {meta_name}"))
+    for t in tables:
+        present = fs.exists(p(f"{path}/{t}"))
+        rows.append(_row(f"table:{t}", present,
+                         "" if present else "table directory missing"))
+    extras = unknown_siblings(spark, path, tables)
     rows.append(_row(
         "no_unknown_siblings", not extras,
         "" if not extras else (
@@ -125,8 +125,6 @@ def detect_index_kind(spark, path: str) -> str:
     ``{path}.clusters`` sibling map upgrades minhash/ivfpq to the
     cluster kinds. Raises with the candidate list when nothing at
     ``path`` looks like an index."""
-    from lotus_spark.functions.index_cdc import _fs
-
     jvm, fs, p = _fs(spark, path)
     found = [k for name, k in _SIDECAR_KINDS.items()
              if fs.exists(p(f"{path}/{name}"))]
@@ -199,10 +197,6 @@ def validate_index(spark, path: str, kind: str | None = None
         # the data itself is the partitioned layout at the root — check
         # the cell directories exist
         if meta is not None:
-            from lotus_spark.functions.index_cdc import (
-                _assert_no_unacked_stream_epochs,
-            )
-
             try:
                 _assert_no_unacked_stream_epochs(spark, path,
                                                  "validate_index")
@@ -282,9 +276,6 @@ def validate_index(spark, path: str, kind: str | None = None
                 f"recount ({n_docs}, {total_dl})"))
 
     else:  # cluster / embedding_cluster: the map + its backing index
-        from lotus_spark.functions.ann import _fs_read_json
-        from lotus_spark.functions.index_cdc import _fs
-
         jvm, fs, p = _fs(spark, path)
         map_dir = f"{path}.clusters"
         if not fs.exists(p(map_dir)):
@@ -378,8 +369,6 @@ def index_stats(spark, path: str, kind: str | None = None):
     if kind not in KINDS:
         raise ValueError(f"index_stats: unknown kind {kind!r} "
                          f"(one of {KINDS})")
-    from lotus_spark.functions.ann import _fs_read_json
-
     out: list[tuple[str, str, int]] = []
 
     def _emit(layout: str, pairs: list[tuple[str, int | None]]) -> None:

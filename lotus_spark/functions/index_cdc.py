@@ -44,36 +44,30 @@ Design, stated for the 100 TB reader:
 from __future__ import annotations
 
 import math
-import re
-import uuid
 
 from pyspark.sql import DataFrame, functions as F
 
-from lotus_spark.functions.ann import (
-    _fs_read_json,
-    append_ivfpq_index,
-    read_ivfpq_index,
-)
+from lotus_spark.functions.ann import append_ivfpq_index, read_ivfpq_index
 from lotus_spark.functions.dedup_index import (
     _META as _MH_META,
     append_minhash_index,
     read_minhash_meta,
     release_stream_index_cache,
 )
+from lotus_spark.functions.index_commit import (
+    CELL_ASIDE,
+    STAGED_DELETE,
+    _assert_no_unacked_stream_epochs,
+    _fs,
+    _fs_read_json,
+    _fs_write_json,
+    commit_rewrite,
+    sibling,
+)
 
 ADDED = "added"
 REMOVED = "removed"
 CHANGED = "changed"
-
-
-def _fs(spark, path: str):
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def p(s):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    return jvm, p(path).getFileSystem(conf), p
 
 
 def _ids_frame(ids: DataFrame, id_col: str, who: str) -> DataFrame:
@@ -88,58 +82,6 @@ def _ids_frame(ids: DataFrame, id_col: str, who: str) -> DataFrame:
     if out.filter(F.col(id_col).isNull()).count():
         raise ValueError(f"{who}: NULL ids are not deletable")
     return out
-
-
-def _assert_no_unacked_stream_epochs(spark, path: str, who: str) -> None:
-    """Same crashed-stream guard as ``compact_ivfpq_index`` (see the
-    CRASHED-STREAM GUARD note there, ann.py:743): rewriting cells that
-    hold un-acknowledged ``batch<id>-`` files would erase the prefixes
-    an exactly-once replay uses for cleanup, so the epoch would
-    re-append as duplicates. Refuse and tell the operator to drain the
-    stream first."""
-    jvm, fs, p = _fs(spark, path)
-    sidecar = _fs_read_json(spark, f"{path}/_stream_batches.json")
-    high_water = -1 if sidecar is None else int(sidecar["last_batch_id"])
-    live = fs.globStatus(p(f"{path}/*/batch*-*")) or []
-    unacked = sorted({
-        int(m.group(1))
-        for st in live
-        for m in [re.match(r"batch(\d+)-", st.getPath().getName())]
-        if m and int(m.group(1)) > high_water
-    })
-    if unacked:
-        raise RuntimeError(
-            f"{who}: live files from stream epoch(s) {unacked} exceed the "
-            f"_stream_batches.json high-water mark ({high_water}) — a "
-            "stream crashed inside its commit window; restart and drain it "
-            "(available_now=True suffices), then retry")
-
-
-def _assert_no_unknown_siblings(
-    spark, path: str, tables: tuple[str, ...], meta_name: str, who: str,
-) -> None:
-    """A whole-directory verify-then-swap rewrite carries ONLY the
-    layout's known tables + sidecar into the replacement — anything
-    else co-located in the index directory would be silently DESTROYED
-    by the swap (r12: the r11 text cluster index co-located its
-    ``clusters`` map there and lost it to the first routine delete).
-    Refuse loudly instead; the remedy is the sibling-directory layout
-    (``{path}.clusters`` pattern)."""
-    jvm, fs, p = _fs(spark, path)
-    known = set(tables) | {meta_name}
-    extras = [
-        st.getPath().getName()
-        for st in (fs.listStatus(p(path)) or [])
-        if st.getPath().getName() not in known
-        # _SUCCESS-style markers and dot/underscore files are Spark's
-        and not st.getPath().getName().startswith(("_", "."))
-    ]
-    if extras:
-        raise RuntimeError(
-            f"{who}: unknown entries co-located in the index directory "
-            f"{extras} — the whole-dir rewrite would destroy them; move "
-            "them to sibling directories (the {path}.clusters pattern) "
-            "before maintaining this index")
 
 
 def delete_from_ivfpq_index(
@@ -176,7 +118,7 @@ def delete_from_ivfpq_index(
     # data requires scanning them
     _assert_no_unacked_stream_epochs(spark, path, "delete_from_ivfpq_index")
     jvm0, fs0, p0 = _fs(spark, path)
-    leftover = fs0.globStatus(p0(f"{path}/.cdcold-*")) or []
+    leftover = fs0.globStatus(p0(f"{path}/{CELL_ASIDE}*")) or []
     if leftover:
         raise RuntimeError(
             "delete_from_ivfpq_index: leftover mid-swap state from a "
@@ -229,7 +171,7 @@ def delete_from_ivfpq_index(
     )
 
     jvm, fs, p = _fs(spark, path)
-    tmp = f"{path}.cdcdel-{uuid.uuid4().hex[:8]}"
+    tmp = sibling(path, STAGED_DELETE)
     # (r14 note: a pre-write repartition(cell_col) — one file per
     # rewritten cell — was A/B-measured at ~+0.5s on the apply hot path
     # for a file-count benefit compact_ivfpq_index already owns; the
@@ -253,7 +195,7 @@ def delete_from_ivfpq_index(
 
     for cell in hit_cells:
         live = p(f"{path}/{cell_col}={cell}")
-        aside = p(f"{path}/.cdcold-{uuid.uuid4().hex[:8]}-{cell}")
+        aside = p(sibling(f"{path}/", CELL_ASIDE) + f"-{cell}")
         if not fs.rename(live, aside):
             _drop_completed_asides()  # prior cells are consistent
             fs.delete(p(tmp), True)  # fully regenerated on re-run
@@ -288,18 +230,14 @@ def _filtered_rewrite_swap(
 ) -> int:
     """Shared delete core for the two-narrow-table index layouts
     (MinHash ``buckets``/``sigs``, n-gram ``ngrams``/``sizes``):
-    anti-join the ids out of every table, verify counts, swap the
-    rewrite in atomically-enough (two renames; data is never destroyed
-    before its replacement is verified — the ``compact_*_index``
+    anti-join the ids out of every table into a staged copy and commit
+    it (``index_commit.commit_rewrite`` — the ``compact_*_index``
     discipline, with the delete filter applied during the rewrite, so a
     daily CDC delete doubles as that day's compaction). Returns the
     number of ``count_table`` rows deleted (one per doc in both
     layouts)."""
-    from lotus_spark.functions.ann import _fs_write_json
-
     jvm, fs, p = _fs(spark, path)
-    _assert_no_unknown_siblings(spark, path, tables, meta_name, who)
-    tmp = f"{path}.cdcdel-{uuid.uuid4().hex[:8]}"
+    tmp = sibling(path, STAGED_DELETE)
 
     # ONE aggregate per table (r14, was a separate docs-deleted count
     # plus per-table before/match count pairs): a broadcast LEFT join
@@ -336,27 +274,7 @@ def _filtered_rewrite_swap(
             .repartition(n_files).write.parquet(f"{tmp}/{table}")
         )
     _fs_write_json(spark, f"{tmp}/{meta_name}", meta)
-    for table in tables:
-        n_after = spark.read.parquet(f"{tmp}/{table}").count()
-        if n_after != expected[table]:
-            fs.delete(p(tmp), True)
-            raise RuntimeError(
-                f"{who}: rewritten {table} has {n_after} rows, expected "
-                f"{expected[table]}; original untouched")
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    if not fs.rename(p(path), p(old)):
-        fs.delete(p(tmp), True)
-        raise RuntimeError(f"{who}: could not move {path}")
-    if not fs.rename(p(tmp), p(path)):
-        if not fs.rename(p(old), p(path)):  # roll back
-            raise RuntimeError(
-                f"{who}: could not install rewrite AND the rollback "
-                f"failed — data intact at {old} (original) and {tmp} "
-                f"(rewrite); rename one back to {path} by hand")
-        fs.delete(p(tmp), True)
-        raise RuntimeError(f"{who}: could not install rewrite; "
-                           "original restored")
-    fs.delete(p(old), True)
+    commit_rewrite(spark, path, tmp, who, expect=expected)
     return int(n_docs_deleted)
 
 
@@ -409,9 +327,8 @@ def delete_from_bm25_index(spark, path: str, ids: DataFrame) -> int:
     filtered full rewrite (doubling as compaction), with ``termdf``
     recomputed from the surviving postings and the sidecar stats
     refreshed, all written to a sibling directory, verified, and
-    installed with the two-rename swap. Batch deletes daily (the CDC
-    cadence). Returns the number of DOCS deleted."""
-    from lotus_spark.functions.ann import _fs_write_json
+    committed (``index_commit.commit_rewrite``). Batch deletes daily
+    (the CDC cadence). Returns the number of DOCS deleted."""
     from lotus_spark.functions.bm25_store import (
         _META as _BM_META,
         _corpus_stats,
@@ -419,9 +336,6 @@ def delete_from_bm25_index(spark, path: str, ids: DataFrame) -> int:
         read_bm25_meta,
     )
 
-    _assert_no_unknown_siblings(
-        spark, path, ("postings", "termdf", "doclens"), _BM_META,
-        "delete_from_bm25_index")
     meta = read_bm25_meta(spark, path)
     dids = _ids_frame(ids, "id", "delete_from_bm25_index")
     # ONE (total, matched) aggregate per table (the r14
@@ -444,8 +358,7 @@ def delete_from_bm25_index(spark, path: str, ids: DataFrame) -> int:
     if n_docs_deleted == 0:
         return 0
 
-    jvm, fs, p = _fs(spark, path)
-    tmp = f"{path}.cdcdel-{uuid.uuid4().hex[:8]}"
+    tmp = sibling(path, STAGED_DELETE)
 
     postings = spark.read.parquet(f"{path}/postings")
     n_post_before, n_post_match = _table_counts(postings)
@@ -465,41 +378,16 @@ def delete_from_bm25_index(spark, path: str, ids: DataFrame) -> int:
         .select(*doclens.columns)
     dl_new.write.parquet(f"{tmp}/doclens")
 
-    dl_after = spark.read.parquet(f"{tmp}/doclens")
-    n_dl_after = dl_after.count()
-    expected_dl = n_dl_before - n_docs_deleted
-    n_post_after = spark.read.parquet(f"{tmp}/postings").count() \
-        if n_post_before - n_post_match else 0
-    if (n_post_after != n_post_before - n_post_match
-            or n_dl_after != expected_dl):
-        posts_new.unpersist()
-        fs.delete(p(tmp), True)
-        raise RuntimeError(
-            f"delete_from_bm25_index: rewrite has {n_post_after} postings "
-            f"/ {n_dl_after} doclens rows, expected "
-            f"{n_post_before - n_post_match} / {expected_dl}; "
-            "original untouched")
-    # stats follow bm25_store's pinned convention (docs with >= 1 token)
-    n_docs, total_dl = _corpus_stats(dl_after)
+    posts_new.unpersist()
+    # stats follow bm25_store's pinned convention (docs with >= 1 token);
+    # the known schema spares a footer-inference job
+    n_docs, total_dl = _corpus_stats(
+        spark.read.schema(doclens.schema).parquet(f"{tmp}/doclens"))
     meta = dict(meta, n_docs=n_docs, total_dl=total_dl)
     _fs_write_json(spark, f"{tmp}/{_BM_META}", meta)
-    posts_new.unpersist()
-
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    if not fs.rename(p(path), p(old)):
-        fs.delete(p(tmp), True)
-        raise RuntimeError(f"delete_from_bm25_index: could not move {path}")
-    if not fs.rename(p(tmp), p(path)):
-        if not fs.rename(p(old), p(path)):  # roll back
-            raise RuntimeError(
-                f"delete_from_bm25_index: could not install rewrite AND "
-                f"the rollback failed — data intact at {old} (original) "
-                f"and {tmp} (rewrite); rename one back to {path} by hand")
-        fs.delete(p(tmp), True)
-        raise RuntimeError(
-            "delete_from_bm25_index: could not install rewrite; "
-            "original restored")
-    fs.delete(p(old), True)
+    commit_rewrite(spark, path, tmp, "delete_from_bm25_index", expect={
+        "postings": n_post_before - n_post_match, "termdf": None,
+        "doclens": n_dl_before - n_docs_deleted})
     return int(n_docs_deleted)
 
 
@@ -708,11 +596,10 @@ def delete_from_cluster_map(spark, map_dir: str, ids: DataFrame) -> int:
     BY DESIGN and pinned in tests; rebuild from scratch when renumber/
     split semantics are required.
 
-    Verify-then-swap rewrite of the narrow table; a ``_cluster_meta``
-    sidecar living inside the directory (the embedding twin's layout)
-    rides along to the rewrite. Returns rows deleted. Idempotent;
-    single-writer."""
-    jvm, fs, p = _fs(spark, map_dir)
+    Staged rewrite of the narrow table, committed by
+    ``index_commit.commit_rewrite``; a ``_cluster_meta`` sidecar living
+    inside the directory (the embedding twin's layout) rides along.
+    Returns rows deleted. Idempotent; single-writer."""
     dids = _ids_frame(ids, "id", "delete_from_cluster_map")
     old = spark.read.parquet(map_dir)
     # one (total, matched) aggregate — same fused-guard shape as the
@@ -726,34 +613,12 @@ def delete_from_cluster_map(spark, map_dir: str, ids: DataFrame) -> int:
     if n_match == 0:
         return 0
 
-    tmp = f"{map_dir}.cdcdel-{uuid.uuid4().hex[:8]}"
+    tmp = sibling(map_dir, STAGED_DELETE)
     (old.join(F.broadcast(dids), on="id", how="left_anti")
         .select(*old.columns).write.parquet(tmp))
-    n_after = spark.read.parquet(tmp).count()
-    if n_after != n_before - n_match:
-        fs.delete(p(tmp), True)
-        raise RuntimeError(
-            f"delete_from_cluster_map: rewrite has {n_after} rows, "
-            f"expected {n_before - n_match}; map untouched")
-    sidecar = p(f"{map_dir}/_cluster_meta.json")
-    if fs.exists(sidecar):
-        jvm.org.apache.hadoop.fs.FileUtil.copy(
-            fs, sidecar, fs, p(f"{tmp}/_cluster_meta.json"), False,
-            spark._jsc.hadoopConfiguration())
-    old_dir = f"{map_dir}.old-{uuid.uuid4().hex[:8]}"
-    if not fs.rename(p(map_dir), p(old_dir)):
-        fs.delete(p(tmp), True)
-        raise RuntimeError(f"delete_from_cluster_map: could not move "
-                           f"{map_dir}")
-    if not fs.rename(p(tmp), p(map_dir)):
-        if not fs.rename(p(old_dir), p(map_dir)):
-            raise RuntimeError(
-                f"delete_from_cluster_map: install AND rollback failed — "
-                f"data intact at {old_dir} and {tmp}")
-        fs.delete(p(tmp), True)
-        raise RuntimeError("delete_from_cluster_map: could not install "
-                           "rewrite; original restored")
-    fs.delete(p(old_dir), True)
+    commit_rewrite(spark, map_dir, tmp, "delete_from_cluster_map",
+                   expect={"": n_before - n_match},
+                   carry=("_cluster_meta.json",))
     return int(n_match)
 
 
@@ -859,16 +724,12 @@ def apply_snapshot_to_embedding_cluster_index(
     are the daily approximate tier (full-recall knobs documented on
     ``assign_embedding_clusters_against_index``). Same stability
     semantics: surviving vectors keep their cluster ids."""
-    from lotus_spark.functions.ann import (
-        _fs_read_json as _read_json,
-        append_ivfpq_index as _append_iv,
-    )
     from lotus_spark.functions.cluster_index import (
         apply_embedding_cluster_assignments,
         assign_embedding_clusters_against_index,
     )
 
-    cmeta = _read_json(spark, f"{path}.clusters/_cluster_meta.json")
+    cmeta = _fs_read_json(spark, f"{path}.clusters/_cluster_meta.json")
     if cmeta is None:
         raise FileNotFoundError(
             f"no _cluster_meta.json sidecar at {path}.clusters — not an "
@@ -903,6 +764,6 @@ def apply_snapshot_to_embedding_cluster_index(
         n_merged = remap.count()
         apply_embedding_cluster_assignments(spark, path, assigns, remap,
                                             id_col)
-        _append_iv(spark, path, inc, emb_col=emb_col)
+        append_ivfpq_index(spark, path, inc, emb_col=emb_col)
     return {"deleted": int(n_idx), "upserted": int(n_up),
             "merged_clusters": int(n_merged)}

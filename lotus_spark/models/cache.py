@@ -119,6 +119,18 @@ class SQLiteCache(Cache):
         self._lock = threading.Lock()
 
 
+def _lp_entry(value: str) -> dict:
+    """Decode a ``logprobs=True`` cache entry; a bare output string (as
+    written before logprobs were cached) reads as output-only."""
+    try:
+        entry = json.loads(value)
+    except ValueError:
+        entry = None
+    if isinstance(entry, dict) and "output" in entry:
+        return entry
+    return {"output": value, "logprobs": None}
+
+
 class CachedLM:
     """Wrap any LM with per-message caching (reference ``lm.py:169-236``:
     cache partition → only misses hit the provider → merge)."""
@@ -137,8 +149,12 @@ class CachedLM:
         return getattr(self.lm, name)
 
     def __call__(self, batch: list, **kwargs: Any):
+        """A ``logprobs=True`` call caches each output together with its
+        logprobs (as ``{"output", "logprobs"}`` JSON — the key already
+        separates these entries), so a hit returns what the miss did."""
         from lotus_spark.models.lm import LMOutput
 
+        with_lp = bool(kwargs.get("logprobs"))
         keys = [cache_key(self.lm.model, m, kwargs) for m in batch]
         cached = [self.cache.get(k) for k in keys]
         miss_idx = [i for i, c in enumerate(cached) if c is None]
@@ -146,12 +162,23 @@ class CachedLM:
         self.misses += len(miss_idx)
         if miss_idx:
             fresh = self.lm([batch[i] for i in miss_idx], **kwargs)
+            fresh_lp = fresh.logprobs or [None] * len(miss_idx)
             for j, i in enumerate(miss_idx):
                 cached[i] = fresh.outputs[j]
-                self.cache.put(keys[i], fresh.outputs[j])
+                if with_lp:
+                    cached[i] = json.dumps({"output": fresh.outputs[j],
+                                            "logprobs": fresh_lp[j]})
+                self.cache.put(keys[i], cached[i])
         if hasattr(self.lm, "usage"):
             self.lm.usage.virtual_calls += len(batch) - len(miss_idx)
-        return LMOutput(outputs=list(cached))
+        if not with_lp:
+            return LMOutput(outputs=list(cached))
+        entries = [_lp_entry(c) for c in cached]
+        logprobs = [e["logprobs"] for e in entries]
+        return LMOutput(
+            outputs=[e["output"] for e in entries],
+            logprobs=logprobs if any(lp is not None for lp in logprobs)
+            else None)
 
 
 def join_answer_cache(df, prompt_col: str, cache_df, answer_col: str = "answer"):

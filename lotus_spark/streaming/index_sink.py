@@ -16,9 +16,9 @@ batch_id, so the sink records committed batch ids in a
 any batch id at or below the high-water mark — a replayed epoch appends
 nothing twice. Single-writer (one streaming query per index path), the
 normal topology for an index feed. The sidecar write goes through
-``ann._fs_write_json`` (temp + rename), so a crash mid-write leaves it
-missing-or-previous, never truncated mid-json — a consumer can always
-parse what it finds.
+``index_commit._fs_write_json`` (temp + rename), so a crash mid-write
+leaves it missing-or-previous, never truncated mid-json — a consumer
+can always parse what it finds.
 
 Contract boundaries, stated plainly:
 
@@ -64,14 +64,14 @@ from pyspark.sql import DataFrame
 
 
 def _read_high_water(spark, path: str) -> int:
-    from lotus_spark.functions.ann import _fs_read_json
+    from lotus_spark.functions.index_commit import _fs_read_json
 
     meta = _fs_read_json(spark, f"{path}/_stream_batches.json")
     return -1 if meta is None else int(meta["last_batch_id"])
 
 
 def _write_high_water(spark, path: str, batch_id: int) -> None:
-    from lotus_spark.functions.ann import _fs_write_json
+    from lotus_spark.functions.index_commit import _fs_write_json
 
     _fs_write_json(spark, f"{path}/_stream_batches.json",
                    {"last_batch_id": int(batch_id)})
@@ -153,9 +153,8 @@ def stream_append_ivfpq(
     """
     from pyspark.sql import functions as F
 
-    from lotus_spark.functions.ann import (
-        _fs_read_json, encode_ivfpq, read_ivfpq_index,
-    )
+    from lotus_spark.functions.ann import encode_ivfpq, read_ivfpq_index
+    from lotus_spark.functions.index_commit import _fs_read_json
 
     if not stream.isStreaming:
         raise ValueError("stream_append_ivfpq expects a streaming "

@@ -1519,8 +1519,10 @@ def test_ivfpq_sidecar_schema_pin_matches_inference(spark, tmp_path):
     import numpy as np
 
     from lotus_spark.functions.ann import (
-        _fs_read_json, _fs_write_json, _read_ivfpq_index_with_meta,
-        ivf_index, pq_index, write_ivfpq_index,
+        _read_ivfpq_index_with_meta, ivf_index, pq_index, write_ivfpq_index,
+    )
+    from lotus_spark.functions.index_commit import (
+        _fs_read_json, _fs_write_json,
     )
 
     rng = np.random.RandomState(31)

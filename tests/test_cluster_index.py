@@ -282,3 +282,58 @@ def test_assign_retires_previous_collapse_cache(spark, tmp_path):
     assert len(ci._LINGERING_COLLAPSE_CACHE) == 1
     assert ci._LINGERING_COLLAPSE_CACHE[0] is not parked
     ci._LINGERING_COLLAPSE_CACHE.pop().unpersist(False)
+
+
+def test_assign_survives_a_stale_park_that_cannot_unpersist(spark, tmp_path):
+    """A parked cache whose session is gone raises on ``unpersist``; the
+    retire loop must drop it and let the fresh assign run."""
+    from lotus_spark.functions import cluster_index as ci
+
+    class _StalePark:
+        def unpersist(self, blocking=False):
+            raise RuntimeError("SparkContext was shut down")
+
+    corpus = _rows(spark, [(0, A_TEXT), (1, B_TEXT)])
+    path = str(tmp_path / "cl")
+    build_cluster_index(spark, corpus, path, "text", "doc_id", **PARAMS)
+    ci._LINGERING_COLLAPSE_CACHE[:] = [_StalePark()]
+    a, _ = assign_clusters_against_index(
+        spark, path, _rows(spark, [(10, C_TEXT)]), "text", "doc_id",
+        corpus_df=corpus)
+    assert a.count() == 1
+    assert len(ci._LINGERING_COLLAPSE_CACHE) == 1
+    assert not isinstance(ci._LINGERING_COLLAPSE_CACHE[0], _StalePark)
+    ci._LINGERING_COLLAPSE_CACHE.pop().unpersist(False)
+
+
+def test_assign_failure_releases_its_caches(spark, tmp_path, monkeypatch):
+    """If the probe raises after the collapse cache is persisted, the
+    call must unpersist what it cached instead of leaking it unparked."""
+    from lotus_spark.functions import cluster_index as ci
+
+    corpus = _rows(spark, [(0, A_TEXT), (1, B_TEXT)])
+    path = str(tmp_path / "cl")
+    build_cluster_index(spark, corpus, path, "text", "doc_id", **PARAMS)
+    ci._LINGERING_COLLAPSE_CACHE.clear()
+
+    persisted = []
+    DataFrame = type(corpus)  # the concrete (classic) DataFrame class
+    real_persist = DataFrame.persist
+
+    def recording_persist(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    def failing_probe(*args, **kwargs):
+        raise ValueError("probe failed")
+
+    monkeypatch.setattr(DataFrame, "persist", recording_persist)
+    monkeypatch.setattr(ci, "neardup_join_index", failing_probe)
+    with pytest.raises(ValueError, match="probe failed"):
+        assign_clusters_against_index(
+            spark, path, _rows(spark, [(10, C_TEXT)]), "text", "doc_id",
+            corpus_df=corpus)
+    assert persisted  # the collapse cache (and the signature cache)
+    assert not any(df.storageLevel.useMemory or df.storageLevel.useDisk
+                   for df in persisted)
+    assert not ci._LINGERING_COLLAPSE_CACHE

@@ -232,3 +232,30 @@ def test_compact_ngram_index_preserves_rows_and_answers(spark, tmp_path):
         for r in contamination_against_index(
             spark, path, train, "text", "doc_id").collect())
     assert after == before and len(after) >= 2
+
+
+def test_compact_ngram_index_refuses_co_located_entries(spark, tmp_path):
+    """A whole-directory compaction carries only the index's own tables
+    into the rewrite, so an entry co-located inside the index directory
+    (here a ``clusters`` map) must make it refuse, as the n-gram delete
+    already does — never vanish with the swap."""
+    import os
+
+    from lotus_spark.functions.decontam_index import (
+        compact_ngram_index, write_ngram_index,
+    )
+    from lotus_spark.functions.index_cdc import delete_from_ngram_index
+
+    path = str(tmp_path / "ng")
+    write_ngram_index(_docs(spark, EVAL), path, "text", "doc_id",
+                      ngram_n=3)
+    spark.createDataFrame([(1, 1)], "id long, cluster long") \
+        .write.parquet(f"{path}/clusters")
+
+    with pytest.raises(RuntimeError, match="unknown entries co-located"):
+        delete_from_ngram_index(spark, path,
+                                spark.createDataFrame([(1,)], "id long"))
+    with pytest.raises(RuntimeError, match="unknown entries co-located"):
+        compact_ngram_index(spark, path)
+    assert spark.read.parquet(f"{path}/clusters").count() == 1
+    assert not [n for n in os.listdir(tmp_path) if n != "ng"]  # no leftovers

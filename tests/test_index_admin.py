@@ -100,7 +100,9 @@ def test_validate_bm25_and_ngram(spark, tmp_path):
     assert rep["ok"], rep["checks"]
 
     # stale sidecar stats reported
-    from lotus_spark.functions.ann import _fs_read_json, _fs_write_json
+    from lotus_spark.functions.index_commit import (
+        _fs_read_json, _fs_write_json,
+    )
 
     meta = _fs_read_json(spark, f"{bm}/_bm25_meta.json")
     _fs_write_json(spark, f"{bm}/_bm25_meta.json",
@@ -173,7 +175,7 @@ def test_validate_index_kind_autodetect(spark, tmp_path):
     # ambiguity refusal (r13 ADVICE): an index written over a stale dir
     # of another layout carries TWO sidecars — autodetect must refuse,
     # not silently fsck whichever kind sorts first
-    from lotus_spark.functions.ann import _fs_write_json
+    from lotus_spark.functions.index_commit import _fs_write_json
 
     _fs_write_json(spark, f"{bm}/_minhash_meta.json", {"stale": True})
     with pytest.raises(ValueError, match="AMBIGUOUS"):

@@ -51,6 +51,24 @@ def test_cached_lm_avoids_repeat_calls():
     assert lm.hits == 2 and lm.misses == 3
 
 
+def test_cached_lm_keeps_logprobs_on_miss_and_hit():
+    """A cascade helper behind the cache keeps its confidence signal: a
+    ``logprobs=True`` call returns the bare LM's logprobs, and a
+    repeated call answered from the cache returns them again."""
+    batch = [_msgs("x marks the spot"), _msgs("nothing here")]
+    bare = KeywordBoolLM("x")(batch, logprobs=True)
+    inner = KeywordBoolLM("x")
+    lm = CachedLM(inner)
+    miss = lm(batch, logprobs=True)
+    hit = lm(batch, logprobs=True)
+    assert miss.logprobs is not None
+    assert miss.outputs == hit.outputs == bare.outputs
+    assert miss.logprobs == hit.logprobs == bare.logprobs
+    assert inner.usage.total_calls == 2 and lm.hits == 2
+    # a plain call is keyed apart and answers outputs only
+    assert lm(batch).outputs == bare.outputs
+
+
 def test_lru_cache_evicts_oldest():
     c = InMemoryLRUCache(max_size=2)
     c.put("a", "1"); c.put("b", "2"); c.put("c", "3")

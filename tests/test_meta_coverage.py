@@ -200,3 +200,39 @@ def test_examples_compile():
     assert ex_dir.is_dir() and list(ex_dir.glob("*.py"))
     for p in ex_dir.glob("*.py"):
         compile(p.read_text(), str(p), "exec")
+
+
+def test_fs_rename_only_in_the_commit_protocols():
+    """Every whole-directory index rewrite commits through
+    ``functions/index_commit.py``; the only other rename-based commits
+    are ``index_cdc.delete_from_ivfpq_index``'s per-cell swap and the
+    stream sink's staged epoch commit, whose rollback rules differ. A
+    hand-copied swap anywhere else fails here."""
+    import ast
+
+    allowed = {
+        "lotus_spark/functions/index_commit.py": None,  # any function
+        "lotus_spark/streaming/index_sink.py": None,
+        "lotus_spark/functions/index_cdc.py": {"delete_from_ivfpq_index"},
+    }
+    root = TESTS_DIR.parent
+    rename = re.compile(r"\bfs\w*\.rename\(")
+    stray = []
+    for src in sorted((root / "lotus_spark").rglob("*.py")):
+        rel = src.relative_to(root).as_posix()
+        text = src.read_text()
+        lines = [i for i, ln in enumerate(text.splitlines(), 1)
+                 if rename.search(ln)]
+        if not lines or (rel in allowed and allowed[rel] is None):
+            continue
+        spans = [(n.lineno, n.end_lineno, n.name)
+                 for n in ast.parse(text).body
+                 if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+        for line in lines:
+            owner = next((name for lo, hi, name in spans if lo <= line <= hi),
+                         None)
+            if owner not in allowed.get(rel, ()):
+                stray.append(f"{rel}:{line} ({owner})")
+    assert not stray, (
+        "fs.rename outside the commit protocols — commit through "
+        f"index_commit.commit_rewrite instead: {stray}")

@@ -206,7 +206,9 @@ def test_cluster_map_cdc_stability_and_sync(spark, tmp_path):
 def test_delete_from_cluster_map_semantics(spark, tmp_path):
     """Idempotent; 0 on no-match; sidecar inside the dir survives the
     rewrite (embedding-twin layout)."""
-    from lotus_spark.functions.ann import _fs_read_json, _fs_write_json
+    from lotus_spark.functions.index_commit import (
+        _fs_read_json, _fs_write_json,
+    )
     from lotus_spark.functions.index_cdc import delete_from_cluster_map
 
     mp = str(tmp_path / "map")
