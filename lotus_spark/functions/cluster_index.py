@@ -57,14 +57,6 @@ from lotus_spark.functions.index_commit import (
 
 _CMETA = "_cluster_meta.json"
 
-# one-slot park for the exact-collapse cache that
-# assign_clusters_against_index leaves behind (its returned assignments
-# frame reads the cache lazily AFTER the call returns, so the function
-# cannot unpersist inline without forcing a recompute inside the
-# caller's action); the next assign call retires it, bounding a
-# long-lived session at one lingering cache — see the park-site comment
-_LINGERING_COLLAPSE_CACHE: list = []
-
 _INTEGRAL = ("tinyint", "smallint", "int", "bigint")
 
 
@@ -183,7 +175,13 @@ def assign_clusters_against_index(
     has its rep's signature, bands and matches, so its edges were
     redundant after the lift), and the reps' pinned signature cache
     feeds the probe (``query_sigs``) so the 16-hash shingle fold runs
-    once per rep overall. Equality argument in :func:`_merge_assign`."""
+    once per rep overall. Equality argument in :func:`_merge_assign`.
+
+    Lifetime: ``assignments`` reads the exact-collapse frame, a lazy
+    ``localCheckpoint`` (MEMORY_AND_DISK) that Spark's ContextCleaner
+    frees once the caller drops the frames and the JVM collects them.
+    It cuts lineage: losing an executor that holds its blocks fails a
+    later read (checkpoint block not found) — re-run the assign."""
     from pyspark import StorageLevel
 
     from lotus_spark.functions.dedup import _rep_edges
@@ -201,22 +199,18 @@ def assign_clusters_against_index(
     _require_disjoint_increment(increment, cmap, id_col,
                                 "assign_clusters_against_index")
 
-    while _LINGERING_COLLAPSE_CACHE:  # retire the previous call's park
-        stale = _LINGERING_COLLAPSE_CACHE.pop()
-        try:
-            stale.unpersist(False)
-        except Exception:  # e.g. its session was stopped: just drop it
-            pass
-
     # exact-collapse prefix (the hot-bucket guard) — the same algebra
     # minhash_clusters runs: one aggregate + skew-splittable join, one
     # cached copy serving both the rep extraction and the final
-    # member-expansion join
+    # member-expansion join; the returned assignments frame reads it
+    # after return (an unpersist here would recompute the aggregate +
+    # join inside the caller's action), hence the lazy local checkpoint
     grp = increment.groupBy(text_col).agg(F.min(id_col).alias("__rep"))
     tagged = increment.join(
         grp.withColumnRenamed(text_col, "__gcol"),
         F.col(text_col).eqNullSafe(F.col("__gcol")),
-    ).drop("__gcol").persist(StorageLevel.MEMORY_AND_DISK)
+    ).drop("__gcol").localCheckpoint(
+        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
     sigd = None
     try:
         reps = tagged.filter(F.col(id_col) == F.col("__rep")).drop("__rep")
@@ -238,25 +232,11 @@ def assign_clusters_against_index(
                                 F.col("__rep").alias("__node"))
         out = _merge_assign(members, local_edges, matches, cmap,
                             id_col, cluster_col)
-    except BaseException:
-        # nothing will read the caches: release them, do not park
-        tagged.unpersist(False)
+    finally:
+        # on success the CC inside _merge_assign materialized the edge
+        # union, so the signature cache has served all its consumers
         if sigd is not None:
             sigd.unpersist(False)
-        raise
-    # the CC inside _merge_assign materialized the edge union, so the
-    # signature cache has served all its consumers
-    sigd.unpersist(False)
-    # the collapse cache still has ONE lazy consumer after return — the
-    # assignments frame reads it when the caller materializes — so an
-    # inline unpersist here would recompute the aggregate+join inside
-    # the caller's action (+5 AQE stage-jobs, measured). Instead the
-    # cache is parked and the NEXT assign call retires it: a long-lived
-    # snapshot-CDC loop (index_cdc calls this once per increment) keeps
-    # at most one lingering increment cache instead of one per call
-    # (single-writer discipline is already this index's contract, so
-    # the one-slot park is not racing concurrent assigns)
-    _LINGERING_COLLAPSE_CACHE.append(tagged)
     return out
 
 

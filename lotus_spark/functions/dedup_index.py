@@ -53,23 +53,30 @@ from pyspark.sql import functions as F
 
 _META = "_minhash_meta.json"
 
-# static sides persisted by neardup_matches_stream, keyed by index path —
-# repeat setup calls reuse one cached copy instead of stacking persists
-_STREAM_STATIC_CACHE: dict[str, tuple[DataFrame, DataFrame]] = {}
+
+def _tables(spark, path: str, meta: dict) -> tuple[DataFrame, DataFrame]:
+    """Reads of ``buckets`` and ``sigs`` given their schema (an
+    inferring read launches a footer job); equal reads name one
+    cache-manager entry. An index written before the id-type pin
+    infers."""
+    idt = meta.get("id_type")
+
+    def read(table: str, ddl: str) -> DataFrame:
+        r = spark.read if idt is None else spark.read.schema(ddl)
+        return r.parquet(f"{path}/{table}")
+
+    return (read("buckets", f"band string, id {idt}"),
+            read("sigs", f"id {idt}, minhash array<bigint>"))
 
 
-def release_stream_index_cache(path: str | None = None) -> None:
-    """Unpersist the static index frames cached by
-    :func:`neardup_matches_stream` — for ``path`` only, or all of them
-    (``path=None``). Call after stopping the streaming query; also the
-    way to make a running-session probe see rows appended after setup
-    (release, then call ``neardup_matches_stream`` again)."""
-    keys = [path] if path is not None else list(_STREAM_STATIC_CACHE)
-    for k in keys:
-        cached = _STREAM_STATIC_CACHE.pop(k, None)
-        if cached is not None:
-            for df in cached:
-                df.unpersist()
+def release_stream_index_cache(spark, path: str) -> None:
+    """Unpersist the static index frames :func:`neardup_matches_stream`
+    cached for ``path`` (an equal read names the same cache entry).
+    Call after stopping the streaming query; also the way to make a
+    running-session probe see rows appended after setup (release, then
+    call ``neardup_matches_stream`` again)."""
+    for df in _tables(spark, path, read_minhash_meta(spark, path)):
+        df.unpersist()
 
 
 def _check_cols(df: DataFrame, text_col: str, id_col: str, who: str) -> None:
@@ -136,6 +143,7 @@ def write_minhash_index(
     _fs_write_json(df.sparkSession, f"{path}/{_META}", {
         "n_hashes": int(n_hashes), "bands": int(bands),
         "shingle_n": int(shingle_n), "id_col": id_col,
+        "id_type": df.schema[id_col].dataType.simpleString(),
     })
 
 
@@ -160,9 +168,14 @@ def append_minhash_index(
     write of the union (parity-pinned in tests). Single-writer, like
     the IVF-PQ appenders. NULL ids are rejected loudly (a NULL id can
     never be reported as a match, so indexing it only pollutes
-    buckets)."""
+    buckets), and so is an id type other than the pinned one."""
     meta = read_minhash_meta(spark, path)
     _check_cols(new_df, text_col, id_col, "append_minhash_index")
+    idt = new_df.schema[id_col].dataType.simpleString()
+    if meta.get("id_type", idt) != idt:
+        raise TypeError(
+            f"append_minhash_index: {id_col!r} is {idt} but the index "
+            f"pins id type {meta['id_type']} — cast the ids first")
     n_null = new_df.filter(F.col(id_col).isNull()).count()
     if n_null:
         raise ValueError(
@@ -192,9 +205,9 @@ def compact_minhash_index(
                     "compact_minhash_index")
     # a neardup_matches_stream cache for this path snapshots the OLD
     # files (now deleted) — drop it so a probe set up after compaction
-    # in the same process reads the swapped-in index instead of dead
+    # in the same session reads the swapped-in index instead of dead
     # persisted frames
-    release_stream_index_cache(path)
+    release_stream_index_cache(spark, path)
 
 
 def _compact_tables(
@@ -434,13 +447,14 @@ def neardup_matches_stream(
     the multi-band hits of one pair (bounded state, watermark-evicted;
     the same chained-stateful pattern as ``streaming_neardup_minhash``).
 
-    The static sides are CACHED once PER INDEX PATH (``persist()``,
-    MEMORY_AND_DISK — Spark spills or recomputes what exceeds memory),
-    so each micro-batch pays the join probe, not a corpus re-read.
-    Repeat calls for the same path (e.g. a restart loop) REUSE the
-    cached frames instead of stacking new copies; call
+    The static sides are CACHED (``persist()``, MEMORY_AND_DISK — Spark
+    spills or recomputes what exceeds memory), so each micro-batch pays
+    the join probe, not a corpus re-read. Spark's cache manager owns the
+    copy: repeat calls for the same path (e.g. a restart loop) persist
+    an equal read, which is one entry, not a stacked copy, and a new
+    SparkContext starts without it. Call
     :func:`release_stream_index_cache` when done with an index to
-    unpersist them eagerly. Consequence of the snapshot: rows added by
+    unpersist it eagerly. Consequence of the snapshot: rows added by
     ``append_minhash_index`` AFTER setup are invisible to a running
     probe — release the cache and restart the query to pick them up.
 
@@ -470,15 +484,8 @@ def neardup_matches_stream(
         F.col(ts_col), F.col(id_col), F.col("__qsig"),
         F.explode(F.array(*band_keys)).alias("band"),
     )
-    cached = _STREAM_STATIC_CACHE.get(path)
-    if cached is None:
-        cached = (
-            spark.read.parquet(f"{path}/buckets").persist(),
-            spark.read.parquet(f"{path}/sigs").persist(),
-        )
-        _STREAM_STATIC_CACHE[path] = cached
-    raw_buckets, raw_sigs = cached
-    corpus_buckets = raw_buckets
+    corpus_buckets, raw_sigs = (
+        df.persist() for df in _tables(spark, path, meta))
     corpus_sigs = raw_sigs.select(
         F.col("id").alias(match_col), F.col("minhash").alias("__msig"))
     agree = F.size(F.filter(

@@ -15,7 +15,8 @@ narrow-column aggregates — never a full-payload scan):
 
 - every family: sidecar present + required keys; leftover maintenance
   siblings (``.cdcold-*`` / ``.cdcdel-*`` / ``.compact-*`` / ``.old-*``
-  / ``.rw-*`` — evidence of a crashed swap, with the recovery named);
+  / ``.rw-*`` — evidence of a crashed swap, with the recovery named;
+  a crashed sidecar write's ``.tmp-*`` / ``.bak-*`` copies);
   unknown co-located entries (the whole-dir swaps refuse them; see
   ``index_commit._assert_no_unknown_siblings``). The leftover names
   are ``index_commit.LEFTOVER_PREFIXES``; the leftover check runs even
@@ -43,6 +44,8 @@ from pyspark.sql import functions as F
 
 from lotus_spark.functions.index_commit import (
     LEFTOVER_PREFIXES,
+    SIDECAR_ASIDE,
+    SIDECAR_LEFTOVERS,
     _assert_no_unacked_stream_epochs,
     _fs,
     _fs_read_json,
@@ -60,14 +63,13 @@ def _row(check: str, ok: bool, detail: str = "") -> dict:
 
 
 def _sibling_leftovers(spark, path: str) -> list[str]:
+    """Crashed-commit names: rewrite siblings and sidecar copies."""
     jvm, fs, p = _fs(spark, path)
-    found: list[str] = []
-    for g in _LEFTOVER_GLOBS:
-        for st in (fs.globStatus(p(f"{path}{g}")) or []):
-            found.append(st.getPath().getName())
-        for st in (fs.globStatus(p(f"{path}/{g}")) or []):
-            found.append(st.getPath().getName())
-    return found
+    globs = [f"{path}{g}" for g in _LEFTOVER_GLOBS]
+    globs += [f"{path}/{g}" for g in _LEFTOVER_GLOBS]
+    globs += [f"{path}/*{s}*" for s in SIDECAR_LEFTOVERS]
+    return [st.getPath().getName() for g in globs
+            for st in (fs.globStatus(p(g)) or [])]
 
 
 def _check_layout(spark, path: str, tables: tuple[str, ...],
@@ -89,9 +91,11 @@ def _check_layout(spark, path: str, tables: tuple[str, ...],
     if not exists:
         return None
     meta = _fs_read_json(spark, f"{path}/{meta_name}")
+    bak = [n for n in left if n.startswith(f"{meta_name}{SIDECAR_ASIDE}")]
     rows.append(_row(
         "sidecar", meta is not None,
-        "" if meta is not None else f"missing {meta_name}"))
+        "" if meta is not None else f"missing {meta_name}" + (
+            f" — its write crashed: rename {bak[0]} back" if bak else "")))
     for t in tables:
         present = fs.exists(p(f"{path}/{t}"))
         rows.append(_row(f"table:{t}", present,

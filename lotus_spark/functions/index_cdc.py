@@ -297,7 +297,7 @@ def delete_from_minhash_index(spark, path: str, ids: DataFrame) -> int:
         spark, path, ("buckets", "sigs"), _MH_META, meta, dids,
         count_table="sigs", who="delete_from_minhash_index")
     if n:
-        release_stream_index_cache(path)
+        release_stream_index_cache(spark, path)
     return n
 
 

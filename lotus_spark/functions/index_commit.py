@@ -51,6 +51,10 @@ ASIDE = ".old-"               # the live copy, moved aside by install
 CELL_ASIDE = ".cdcold-"       # delete_from_ivfpq_index's per-cell aside
 LEFTOVER_PREFIXES = (CELL_ASIDE, STAGED_DELETE, STAGED_COMPACT, ASIDE,
                      STAGED_REWRITE)
+# name suffixes of an in-flight sidecar write (inside the index dir)
+SIDECAR_STAGED = ".tmp-"      # the new content, before install
+SIDECAR_ASIDE = ".bak-"       # the previous content, moved aside
+SIDECAR_LEFTOVERS = (SIDECAR_STAGED, SIDECAR_ASIDE)
 
 
 def sibling(path: str, prefix: str) -> str:
@@ -192,20 +196,21 @@ def _fs_write_json(spark, path: str, obj) -> None:
     """JSON sidecar write through the Hadoop FS API (hdfs:// and s3a://
     like local): write a ``.tmp-`` sibling, then :func:`install` it with
     the previous content (if any) kept at a ``.bak-`` sibling until the
-    new one is in. The sidecar is never TRUNCATED mid-json (the failure
-    mode that wedges a consumer on JSONDecodeError), and its previous
+    new one is in (``validate_index`` reports both if a crash leaves
+    them). The sidecar is never TRUNCATED mid-json (the failure mode
+    that wedges a consumer on JSONDecodeError), and its previous
     content is never deleted first — for ``_ivfpq_meta.json`` it holds
     the trained centroids/codebooks. Single point of hardening for
     every index sidecar (meta, stream high-water)."""
     jvm, fs, p = _fs(spark, path)
     token = uuid.uuid4().hex[:8]
-    tmp = f"{path}.tmp-{token}"
+    tmp = f"{path}{SIDECAR_STAGED}{token}"
     out = fs.create(p(tmp), True)
     try:
         out.write(bytearray(json.dumps(obj).encode()))
     finally:
         out.close()
-    bak = f"{path}.bak-{token}" if fs.exists(p(path)) else None
+    bak = f"{path}{SIDECAR_ASIDE}{token}" if fs.exists(p(path)) else None
     install(fs, p, path, tmp, bak, "sidecar write")
 
 

@@ -1557,3 +1557,21 @@ def test_ivfpq_sidecar_schema_pin_matches_inference(spark, tmp_path):
     fallback, meta2 = _read_ivfpq_index_with_meta(spark, path)
     assert meta2.get("table_schema") is None
     assert fallback.schema == inferred.schema
+
+
+def test_sql_str_round_trips_control_characters_quotes_and_backslashes(
+        spark):
+    """``ann._sql_str`` escapes only quotes and backslashes; every other
+    character, control characters included, must reach Spark's SQL
+    parser raw and come back unchanged. Pinned before any tokenizer
+    change relies on it."""
+    from pyspark.sql import functions as F
+
+    from lotus_spark.functions.ann import _sql_str
+
+    cases = ["\n", "\t", "\r", "\x00", "\x07", "\x1b", "\x7f", "'", '"',
+             "\\", "\\'", "'\\", "\\n", "a'b\"c\\d\ne\x00f\x1bg\x7f"]
+    row = spark.range(1).select(*[
+        F.expr(_sql_str(s)).alias(f"c{i}") for i, s in enumerate(cases)
+    ]).first()
+    assert list(row) == cases

@@ -248,73 +248,47 @@ def test_string_ids_and_overlapping_increments_raise(spark, tmp_path):
             "emb", "doc_id")
 
 
-def test_assign_retires_previous_collapse_cache(spark, tmp_path):
-    """The exact-collapse cache outlives its call by design (the
-    returned assignments frame reads it lazily), parked in the
-    module-level one-slot holder; the NEXT assign call must retire it
-    so a long-lived CDC loop holds at most one lingering increment
-    cache, never one per increment."""
-    from lotus_spark.functions import cluster_index as ci
-
+def test_assign_retires_previous_collapse_cache(spark, tmp_path,
+                                               spark_state):
+    """The exact-collapse frame outlives its call by design (the
+    returned assignments frame reads it lazily), so Spark owns its
+    lifetime: a loop of assign calls whose caller materializes and
+    drops each result leaves no cache-manager entry behind, and once
+    the JVM collects the dropped frames the persistent RDDs are back to
+    the pre-loop set — a long-lived CDC loop keeps no increment's
+    blocks. A fresh context, so the ContextCleaner has no backlog of
+    earlier tests' garbage to work through first."""
+    spark_state.restart()
     corpus = _rows(spark, [
         (0, A_TEXT), (1, B_TEXT),
         (2, "completely different text about pasta and cooking"),
     ])
     path = str(tmp_path / "cl")
     build_cluster_index(spark, corpus, path, "text", "doc_id", **PARAMS)
-
-    ci._LINGERING_COLLAPSE_CACHE.clear()
-    a1, _ = assign_clusters_against_index(
-        spark, path, _rows(spark, [(10, C_TEXT)]), "text", "doc_id",
-        corpus_df=corpus)
-    a1.count()  # caller materializes; the cache has now served everyone
-    assert len(ci._LINGERING_COLLAPSE_CACHE) == 1
-    parked = ci._LINGERING_COLLAPSE_CACHE[0]
-    assert parked.storageLevel.useMemory  # still cached after the call
-
-    a2, _ = assign_clusters_against_index(
-        spark, path,
-        _rows(spark, [(11, "a fresh unique document with its own words")]),
-        "text", "doc_id", corpus_df=corpus)
-    a2.count()
-    # the first call's park was retired, the second call's replaced it
-    assert not parked.storageLevel.useMemory
-    assert len(ci._LINGERING_COLLAPSE_CACHE) == 1
-    assert ci._LINGERING_COLLAPSE_CACHE[0] is not parked
-    ci._LINGERING_COLLAPSE_CACHE.pop().unpersist(False)
+    entries = spark_state.cache_entries()
+    before = spark_state.persistent_rdds()
+    for i, text in enumerate([C_TEXT, "a fresh unique document here",
+                              "yet another new text for day three"]):
+        a, remap = assign_clusters_against_index(
+            spark, path, _rows(spark, [(10 + i, text)]), "text", "doc_id",
+            corpus_df=corpus)
+        assert a.count() == 1  # the caller materializes, then drops
+        assert spark_state.cache_entries() == entries
+        assert spark_state.persistent_rdds() - before  # the lazy blocks
+        del a, remap
+    assert spark_state.rdds_after_gc(before) <= before
 
 
-def test_assign_survives_a_stale_park_that_cannot_unpersist(spark, tmp_path):
-    """A parked cache whose session is gone raises on ``unpersist``; the
-    retire loop must drop it and let the fresh assign run."""
-    from lotus_spark.functions import cluster_index as ci
-
-    class _StalePark:
-        def unpersist(self, blocking=False):
-            raise RuntimeError("SparkContext was shut down")
-
-    corpus = _rows(spark, [(0, A_TEXT), (1, B_TEXT)])
-    path = str(tmp_path / "cl")
-    build_cluster_index(spark, corpus, path, "text", "doc_id", **PARAMS)
-    ci._LINGERING_COLLAPSE_CACHE[:] = [_StalePark()]
-    a, _ = assign_clusters_against_index(
-        spark, path, _rows(spark, [(10, C_TEXT)]), "text", "doc_id",
-        corpus_df=corpus)
-    assert a.count() == 1
-    assert len(ci._LINGERING_COLLAPSE_CACHE) == 1
-    assert not isinstance(ci._LINGERING_COLLAPSE_CACHE[0], _StalePark)
-    ci._LINGERING_COLLAPSE_CACHE.pop().unpersist(False)
-
-
-def test_assign_failure_releases_its_caches(spark, tmp_path, monkeypatch):
-    """If the probe raises after the collapse cache is persisted, the
-    call must unpersist what it cached instead of leaking it unparked."""
+def test_assign_failure_releases_its_caches(spark, tmp_path, monkeypatch,
+                                            spark_state):
+    """If the probe raises, the call must unpersist the signature cache
+    it persisted and leave no cache-manager entry behind."""
     from lotus_spark.functions import cluster_index as ci
 
     corpus = _rows(spark, [(0, A_TEXT), (1, B_TEXT)])
     path = str(tmp_path / "cl")
     build_cluster_index(spark, corpus, path, "text", "doc_id", **PARAMS)
-    ci._LINGERING_COLLAPSE_CACHE.clear()
+    entries = spark_state.cache_entries()
 
     persisted = []
     DataFrame = type(corpus)  # the concrete (classic) DataFrame class
@@ -333,7 +307,54 @@ def test_assign_failure_releases_its_caches(spark, tmp_path, monkeypatch):
         assign_clusters_against_index(
             spark, path, _rows(spark, [(10, C_TEXT)]), "text", "doc_id",
             corpus_df=corpus)
-    assert persisted  # the collapse cache (and the signature cache)
+    assert persisted  # the signature cache
     assert not any(df.storageLevel.useMemory or df.storageLevel.useDisk
                    for df in persisted)
-    assert not ci._LINGERING_COLLAPSE_CACHE
+    assert spark_state.cache_entries() == entries
+
+
+def test_two_threads_assign_against_two_indexes(spark, tmp_path):
+    """Two driver threads assigning against two different cluster
+    indexes at the same time each get their single-thread result: no
+    state is shared between the calls."""
+    import threading
+
+    corpus = _rows(spark, [
+        (0, A_TEXT), (1, B_TEXT),
+        (2, "completely different text about pasta and cooking"),
+    ])
+    incs = [
+        _rows(spark, [(10, C_TEXT), (11, "novel words for the first")]),
+        _rows(spark, [(20, "completely different text about pasta and "
+                           "cooking now"), (21, C_TEXT)]),
+    ]
+    paths = [str(tmp_path / f"cl{i}") for i in range(2)]
+    for path in paths:
+        build_cluster_index(spark, corpus, path, "text", "doc_id",
+                            **PARAMS)
+
+    def assign(i):
+        a, remap = assign_clusters_against_index(
+            spark, paths[i], incs[i], "text", "doc_id", corpus_df=corpus)
+        return (sorted(map(tuple, a.collect())),
+                sorted(map(tuple, remap.collect())))
+
+    alone = [assign(i) for i in range(2)]
+    got, errors = [None, None], []
+    start = threading.Barrier(2)
+
+    def run(i):
+        try:
+            start.wait(timeout=60)
+            got[i] = assign(i)
+        except BaseException as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert got == alone

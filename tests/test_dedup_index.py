@@ -80,6 +80,34 @@ def test_minhash_index_append_equals_fresh_write(spark, tmp_path):
             "text", "doc_id")
 
 
+def test_minhash_append_rejects_an_id_type_other_than_the_pinned_one(
+        spark, tmp_path):
+    """The sidecar pins the id type the tables are read with; appending
+    bigint ids to an int index would leave INT64 files that the pinned
+    ``id int`` read cannot decode."""
+    from lotus_spark.functions.dedup_index import (
+        _tables, append_minhash_index, read_minhash_meta,
+        write_minhash_index,
+    )
+
+    path = str(tmp_path / "mh")
+    write_minhash_index(
+        spark.createDataFrame(BASE[:2], "doc_id int, text string"),
+        path, "text", "doc_id", n_hashes=8, bands=2)
+    with pytest.raises(TypeError, match="pins id type int"):
+        append_minhash_index(
+            spark, path,
+            spark.createDataFrame(BASE[2:], "doc_id bigint, text string"),
+            "text", "doc_id")
+    append_minhash_index(
+        spark, path,
+        spark.createDataFrame(BASE[2:], "doc_id int, text string"),
+        "text", "doc_id")
+    _, sigs = _tables(spark, path, read_minhash_meta(spark, path))
+    assert sorted(r["id"] for r in sigs.collect()) == [
+        r[0] for r in BASE]
+
+
 def test_minhash_index_validation(spark, tmp_path):
     from lotus_spark.functions.dedup_index import (
         neardup_join_index, write_minhash_index,
@@ -342,14 +370,15 @@ def test_embedding_neardup_index_honors_pinned_code_col(spark, tmp_path):
     assert (900, 11) in rows
 
 
-def test_neardup_stream_static_cache_reused_and_released(spark, tmp_path):
+def test_neardup_stream_static_cache_reused_and_released(
+        spark, tmp_path, spark_state):
     """r9 ADVICE: repeat neardup_matches_stream setups for one index
-    path must REUSE the persisted static frames (no unbounded cache
-    stacking in a restart loop); release_stream_index_cache unpersists
-    them and a later setup re-caches fresh."""
+    path must not stack cached copies (a restart loop): Spark's cache
+    manager holds one entry per static side. release_stream_index_cache
+    drops both, and neither the setup nor the release runs a Spark job
+    (the reads are given the sidecar's schema)."""
     from pyspark import StorageLevel
 
-    from lotus_spark.functions import dedup_index as di
     from lotus_spark.functions.dedup_index import (
         neardup_matches_stream, release_stream_index_cache,
         write_minhash_index,
@@ -365,20 +394,67 @@ def test_neardup_stream_static_cache_reused_and_released(spark, tmp_path):
     schema = "doc_id long, text string, ts timestamp"
     stream = spark.readStream.schema(schema).parquet(str(src))
 
-    release_stream_index_cache()  # clean slate
-    neardup_matches_stream(spark, path, stream, "text", "doc_id", "ts")
-    assert path in di._STREAM_STATIC_CACHE
-    first = di._STREAM_STATIC_CACHE[path]
-    assert first[0].storageLevel != StorageLevel.NONE
+    entries = spark_state.cache_entries()
+    assert spark_state.jobs(lambda: neardup_matches_stream(
+        spark, path, stream, "text", "doc_id", "ts")) == 0
+    assert spark_state.cache_entries() == entries + 2
+    sigs = spark.read.schema("id bigint, minhash array<bigint>") \
+        .parquet(f"{path}/sigs")
+    assert sigs.storageLevel != StorageLevel.NONE
 
-    # second setup (restart loop): same cached frames, not new persists
+    # second setup (restart loop): the equal reads are the same entries
     neardup_matches_stream(spark, path, stream, "text", "doc_id", "ts")
-    assert di._STREAM_STATIC_CACHE[path] is first
+    assert spark_state.cache_entries() == entries + 2
 
-    release_stream_index_cache(path)
-    assert path not in di._STREAM_STATIC_CACHE
-    assert first[0].storageLevel == StorageLevel.NONE
-    assert first[1].storageLevel == StorageLevel.NONE
+    assert spark_state.jobs(
+        lambda: release_stream_index_cache(spark, path)) == 0
+    assert spark_state.cache_entries() == entries
+    assert sigs.storageLevel == StorageLevel.NONE
+
+
+def test_stream_probe_and_cluster_assign_survive_a_session_restart(
+        spark, tmp_path, spark_state):
+    """A long-lived service stops its session and starts a new one: a
+    stream probe and a cluster assignment that ran in the old session
+    must run the same in the new one (nothing cached in the old
+    SparkContext may leak into the new session's plans)."""
+    from lotus_spark.functions.cluster_index import (
+        assign_clusters_against_index, build_cluster_index,
+    )
+    from lotus_spark.functions.dedup_index import neardup_matches_stream
+
+    texts = ["the quick brown fox jumps over the lazy dog again",
+             "spark dataframes shuffle data between executors",
+             "a fresh unique document with its own words"]
+    rows = [(i, texts[i % 3] + f" {i // 3}") for i in range(12)]
+    path, src = str(tmp_path / "cl"), str(tmp_path / "src")
+
+    def run(day):
+        corpus = _docs(spark, rows)
+        stream = spark.readStream.schema(
+            "doc_id long, text string, ts timestamp").parquet(src)
+        q = (neardup_matches_stream(spark, path, stream, "text", "doc_id",
+                                    "ts", threshold=0.5)
+             .writeStream.format("memory").queryName(f"restart{day}")
+             .trigger(availableNow=True).start())
+        assert q.awaitTermination(timeout=300)
+        a, remap = assign_clusters_against_index(
+            spark, path, _docs(spark, [(100 + day, texts[0] + " 0")]),
+            "text", "doc_id", corpus_df=corpus)
+        return (
+            sorted((r["doc_id"], r["match_id"])
+                   for r in spark.table(f"restart{day}").collect()),
+            [r["cluster"] for r in a.collect()],
+            sorted(map(tuple, remap.collect())),
+        )
+
+    build_cluster_index(spark, _docs(spark, rows), path, "text", "doc_id")
+    (_docs(spark, [(50, texts[1] + " 1")])
+     .withColumn("ts", F.current_timestamp()).write.parquet(src))
+    first = run(1)
+    assert first[0]  # the probe found matches
+    spark_state.restart()
+    assert run(2) == first
 
 
 def test_neardup_index_exact_verify_parity_and_recall(spark, tmp_path):
@@ -687,26 +763,29 @@ def test_exact_verify_stale_corpus_raises_and_dups_collapse(spark, tmp_path):
     assert [(r["doc_id"], r["match_id"]) for r in got] == [(102, 2)]
 
 
-def test_compact_minhash_index_releases_stream_cache(spark, tmp_path):
+def test_compact_minhash_index_releases_stream_cache(spark, tmp_path,
+                                                     spark_state):
     """ADVICE r10: compact_minhash_index swaps the underlying files, so
     it must drop the neardup_matches_stream static cache for that path —
     a probe set up after compaction would otherwise read persisted
     frames over deleted files."""
     from lotus_spark.functions.dedup_index import (
-        _STREAM_STATIC_CACHE, compact_minhash_index, write_minhash_index,
+        compact_minhash_index, neardup_matches_stream, write_minhash_index,
     )
 
     corpus = _docs(spark, BASE)
     path = str(tmp_path / "mh_cc")
     write_minhash_index(corpus, path, "text", "doc_id",
                         n_hashes=16, bands=4)
-    # simulate a prior stream setup having cached the static sides
-    _STREAM_STATIC_CACHE[path] = (
-        spark.read.parquet(f"{path}/buckets").persist(),
-        spark.read.parquet(f"{path}/sigs").persist(),
-    )
+    src = tmp_path / "empty_src"
+    src.mkdir()
+    stream = spark.readStream.schema(
+        "doc_id long, text string, ts timestamp").parquet(str(src))
+    entries = spark_state.cache_entries()
+    neardup_matches_stream(spark, path, stream, "text", "doc_id", "ts")
+    assert spark_state.cache_entries() == entries + 2
     compact_minhash_index(spark, path)
-    assert path not in _STREAM_STATIC_CACHE
+    assert spark_state.cache_entries() == entries
 
 
 def test_neardup_join_index_query_sigs_parity(spark, tmp_path):

@@ -204,7 +204,7 @@ def test_minhash_delete_equals_fresh_write_of_survivors(spark, tmp_path):
         spark.createDataFrame([(i,) for i in dead], "id long")) == 0
 
 
-def test_minhash_delete_releases_stream_cache(spark, tmp_path):
+def test_minhash_delete_releases_stream_cache(spark, tmp_path, spark_state):
     from lotus_spark.functions import dedup_index as di
 
     docs = spark.createDataFrame(
@@ -213,14 +213,16 @@ def test_minhash_delete_releases_stream_cache(spark, tmp_path):
     path = str(tmp_path / "mh")
     di.write_minhash_index(docs, path, "text", "doc_id",
                            n_hashes=8, bands=2)
-    class _Sentinel:
-        def unpersist(self):
-            return self
-
-    di._STREAM_STATIC_CACHE[path] = (_Sentinel(), _Sentinel())
+    src = tmp_path / "empty_src"
+    src.mkdir()
+    stream = spark.readStream.schema(
+        "doc_id long, text string, ts timestamp").parquet(str(src))
+    entries = spark_state.cache_entries()
+    di.neardup_matches_stream(spark, path, stream, "text", "doc_id", "ts")
+    assert spark_state.cache_entries() == entries + 2
     delete_from_minhash_index(
         spark, path, spark.createDataFrame([(0,)], "id long"))
-    assert path not in di._STREAM_STATIC_CACHE
+    assert spark_state.cache_entries() == entries
 
 
 def _snapshots(spark, vecs):

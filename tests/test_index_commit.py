@@ -122,3 +122,44 @@ def test_leftover_globs_come_from_index_commit():
         f"{s}*" for s in index_commit.LEFTOVER_PREFIXES)
     assert set(index_commit.LEFTOVER_PREFIXES) == {
         ".cdcold-", ".cdcdel-", ".compact-", ".old-", ".rw-"}
+
+
+def test_validate_index_names_a_crashed_sidecar_write(spark, tmp_path,
+                                                      monkeypatch):
+    """A sidecar write whose install and rollback renames both fail
+    leaves the previous content at ``.bak-*`` and the new at ``.tmp-*``
+    with no sidecar: fsck reports both leftovers and names the
+    ``.bak-*`` copy to rename back."""
+    path = str(tmp_path / "ng")
+    write_ngram_index(spark.createDataFrame(EVAL, ["doc_id", "text"]),
+                      path, "text", "doc_id", ngram_n=3)
+    meta_path = f"{path}/_ngram_meta.json"
+    meta = index_commit._fs_read_json(spark, meta_path)
+
+    real_fs = index_commit._fs
+
+    def failing_fs(spark_, p):
+        jvm, fs, mk = real_fs(spark_, p)
+        return jvm, _FailingRenames(fs, (2, 3)), mk
+
+    monkeypatch.setattr(index_commit, "_fs", failing_fs)
+    with pytest.raises(RuntimeError, match="rollback failed"):
+        index_commit._fs_write_json(spark, meta_path, dict(meta, x=1))
+    monkeypatch.undo()
+
+    names = os.listdir(path)
+    bak = [n for n in names
+           if n.startswith("_ngram_meta.json" + index_commit.SIDECAR_ASIDE)]
+    assert len(bak) == 1 and "_ngram_meta.json" not in names
+    report = validate_index(spark, path, kind="ngram")
+    assert not report["ok"]
+    assert _check(report, "no_crashed_swap_leftovers") is False
+    leftovers = next(r["detail"] for r in report["checks"]
+                     if r["check"] == "no_crashed_swap_leftovers")
+    assert bak[0] in leftovers and index_commit.SIDECAR_STAGED in leftovers
+    sidecar = next(r["detail"] for r in report["checks"]
+                   if r["check"] == "sidecar")
+    assert bak[0] in sidecar
+    # the recovery the report names restores the previous sidecar
+    os.rename(os.path.join(path, bak[0]), meta_path)
+    assert index_commit._fs_read_json(spark, meta_path) == meta

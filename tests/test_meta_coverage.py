@@ -236,3 +236,49 @@ def test_fs_rename_only_in_the_commit_protocols():
     assert not stray, (
         "fs.rename outside the commit protocols — commit through "
         f"index_commit.commit_rewrite instead: {stray}")
+
+
+def test_no_module_level_mutable_registries():
+    """A module-level empty container is where a DataFrame registry
+    starts: it outlives the session that filled it and is shared by every
+    thread. Spark's cache manager and ``localCheckpoint`` own cached
+    frames' lifetimes; a new module-level ``[]``, ``{}``, ``dict()``,
+    ``list()`` or ``set()`` fails here unless it is allow-listed with
+    its reason."""
+    import ast
+
+    allowed = {
+        # a pure term -> bucket memo: strings and ints, no frames
+        ("lotus_spark/functions/bm25_store.py", "_BUCKET_CACHE"),
+        # UDF wrappers keyed by session, no frames
+        ("lotus_spark/functions/vectors.py", "_UDF_CACHE"),
+        # a plugin registry of search-engine callables, no frames
+        ("lotus_spark/sources/web_search.py", "_ENGINES"),
+    }
+
+    def empty(v) -> bool:
+        if isinstance(v, (ast.List, ast.Set)):
+            return not v.elts
+        if isinstance(v, ast.Dict):
+            return not v.keys
+        return (isinstance(v, ast.Call) and isinstance(v.func, ast.Name)
+                and v.func.id in ("dict", "list", "set")
+                and not v.args and not v.keywords)
+
+    root = TESTS_DIR.parent
+    found = set()
+    for src in sorted((root / "lotus_spark").rglob("*.py")):
+        rel = src.relative_to(root).as_posix()
+        for node in ast.parse(src.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign) and node.value is not None:
+                targets = [node.target]
+            else:
+                continue
+            if empty(node.value):
+                found |= {(rel, ast.unparse(t)) for t in targets}
+    assert found <= allowed, (
+        "module-level mutable registry — let Spark own cached frames "
+        f"(persist through the cache manager, or localCheckpoint): "
+        f"{sorted(found - allowed)}")

