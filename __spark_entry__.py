@@ -737,13 +737,15 @@ def _sql_pq_chain_parts(
     qq: list[int], m: int, nbits: int, iters: int, seed: int, pre0: str,
     train_where: str | None = None,
     src: str = "embeddings", train_src: str | None = None,
+    ct: str = "ct",
 ) -> tuple[list[str], str, str]:
     """Shared PQ-oracle construction: per-subspace kmeans chains + ADC
     contribution CTEs (ct0..ct{m-1}) for quantized query ``qq``; returns
     (ctes, joins, total). One definition for _sql_knn_pq and
     _sql_knn_ivfpq so the replicas cannot drift. ``train_where``
     replays the pinned codebook-training sample in every subspace
-    chain."""
+    chain. ``ct`` names the query's contribution CTEs (a multi-query
+    oracle gives each query its own)."""
     d = len(qq)
     sub = d // m
     ctes = []
@@ -763,13 +765,13 @@ def _sql_pq_chain_parts(
         # CAST: SUM(BIGINT) upstream makes centroid components HUGEINT,
         # which pandas would round-trip as float64
         ctes.append(
-            f"ct{s} AS (SELECT a.vec_id, CAST({dist} AS BIGINT) AS ds "
+            f"{ct}{s} AS (SELECT a.vec_id, CAST({dist} AS BIGINT) AS ds "
             f"FROM {pre}afinal a JOIN {pre}c{iters} c ON a.c = c.c)"
         )
     joins = " ".join(
-        f"JOIN ct{s} ON ct0.vec_id = ct{s}.vec_id" for s in range(1, m)
+        f"JOIN {ct}{s} ON {ct}0.vec_id = {ct}{s}.vec_id" for s in range(1, m)
     )
-    total = " + ".join(f"ct{s}.ds" for s in range(m))
+    total = " + ".join(f"{ct}{s}.ds" for s in range(m))
     return ctes, joins, total
 
 
@@ -1253,7 +1255,7 @@ def _sql_knn_ivfpq_cdc(qv: list[float]) -> str:
 
 def _sql_ivfpq_parts(
     qv: list[float], train_restrict: str | None = None,
-    src: str = "embeddings", train_src: str | None = None,
+    src: str = "embeddings", train_src: str | None = None, p: str = "",
 ) -> tuple[list[str], str, str]:
     """Shared IVF-PQ oracle chain (cell kmeans + probe + sel + 8 PQ
     chains) for _sql_knn_ivfpq and _sql_knn_ivfpq_rerank — one
@@ -1262,7 +1264,10 @@ def _sql_ivfpq_parts(
     oracle trains on the INITIAL half only while encode/probe still
     cover every row). ``src``/``train_src`` (CDC oracle): encode +
     probe run over ``src`` while quantizer training reads ``train_src``
-    — defaults reproduce the pre-r11 SQL byte-identically."""
+    — defaults reproduce the pre-r11 SQL byte-identically. ``p``
+    prefixes the query-dependent CTEs ({p}probe, {p}sel, {p}ct*); the
+    quantizer chains keep their names, so a multi-query oracle states
+    them once."""
     from lotus_spark.functions.kmeans import quantize_vector, train_sample_where
 
     iters = 3
@@ -1280,13 +1285,13 @@ def _sql_ivfpq_parts(
                                   train_src=train_src)
     ctes, joins, total = _sql_pq_chain_parts(
         qq, m=8, nbits=4, iters=iters, seed=101, pre0="pq", train_where=tw,
-        src=src, train_src=train_src)
+        src=src, train_src=train_src, ct=f"{p}ct")
     all_ctes = (
         [cell_chain,
-         f"probe AS (SELECT c FROM iv_c{iters} "
+         f"{p}probe AS (SELECT c FROM iv_c{iters} "
          f"ORDER BY {qdist}, c LIMIT 8)",
-         "sel AS (SELECT vec_id FROM iv_afinal "
-         "WHERE c IN (SELECT c FROM probe))"]
+         f"{p}sel AS (SELECT vec_id FROM iv_afinal "
+         f"WHERE c IN (SELECT c FROM {p}probe))"]
         + ctes
     )
     return all_ctes, joins, total
@@ -3216,10 +3221,19 @@ def q_bm25_index_search(spark, sf_dir):
 
 def _sql_bm25_common(terms: list[str]) -> str:
     """The BM25 oracle relations parameterized by the query's term list
-    (the batch serving row replays several queries; the module-level
-    ``_SQL_BM25_COMMON`` stays the standard-query instance)."""
+    (the module-level ``_SQL_BM25_COMMON`` is the standard-query
+    instance)."""
+    return ",\n".join(_sql_bm25_parts(terms))
+
+
+def _sql_bm25_parts(terms: list[str], p: str = "") -> list[str]:
+    """:func:`_sql_bm25_common` as CTE entries: the query-independent
+    encode relations and corpus stats, then the query's scoring CTEs
+    named ``{p}q``/``{p}hits``/``{p}part``/``{p}bm``."""
     lst = ", ".join(f"'{t}'" for t in terms)
-    return _SQL_BM25_COMMON_TMPL.replace("@TERMS@", lst)
+    return [_SQL_BM25_RELATIONS, _SQL_BM25_STATS,
+            _SQL_BM25_QUERY_TMPL.replace("@TERMS@", lst)
+            .replace("@P@", p)]
 
 
 # the encode relations alone (tokenize -> postings/doclens/termdf) —
@@ -3233,25 +3247,26 @@ post AS (SELECT term, doc_id, COUNT(*) AS tf FROM tok WHERE term != ''
 dlen AS (SELECT doc_id, COUNT(*) AS dl FROM tok WHERE term != '' GROUP BY 1),
 tdf AS (SELECT term, COUNT(*) AS df FROM post GROUP BY 1)"""
 
-_SQL_BM25_COMMON_TMPL = _SQL_BM25_RELATIONS + r""",
-g AS (SELECT COUNT(*) AS n, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
-      FROM dlen),
-q AS (SELECT unnest([@TERMS@]) AS term),
-hits AS (SELECT p.doc_id, p.tf, t.df, l.dl
-         FROM post p JOIN q USING (term) JOIN tdf t USING (term)
+_SQL_BM25_STATS = r"""g AS (SELECT COUNT(*) AS n, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
+      FROM dlen)"""
+
+_SQL_BM25_QUERY_TMPL = r"""@P@q AS (SELECT unnest([@TERMS@]) AS term),
+@P@hits AS (SELECT p.doc_id, p.tf, t.df, l.dl
+         FROM post p JOIN @P@q USING (term) JOIN tdf t USING (term)
          JOIN dlen l USING (doc_id)),
-part AS (SELECT doc_id,
+@P@part AS (SELECT doc_id,
            CAST(ROUND(
              ln(1 + (g.n - df + 0.5) / (df + 0.5))
              * (tf * (1.0 + 1.2))
              / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl / g.avgdl)), 9)
            AS DECIMAL(28,10)) AS p
-         FROM hits, g),
-bm AS (SELECT doc_id, CAST(SUM(p) AS DOUBLE) AS score FROM part
+         FROM @P@hits, g),
+@P@bm AS (SELECT doc_id, CAST(SUM(p) AS DOUBLE) AS score FROM @P@part
        GROUP BY doc_id)
 """
 
-_SQL_BM25_COMMON = _sql_bm25_common(["spark", "window", "merge", "join"])
+_BM25_TERMS = ["spark", "window", "merge", "join"]
+_SQL_BM25_COMMON = _sql_bm25_common(_BM25_TERMS)
 
 _SQL_BM25 = f"""
 WITH {_SQL_BM25_COMMON}
@@ -5342,14 +5357,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sem_pipeline": q_sem_pipeline,
         "filter_reorder": q_filter_reorder,
         "llm_judge": q_llm_judge,
-        "llm_judge_structured": q_llm_judge_structured,
+        # -- importer of functions/bm25.py (rrf_fuse_batch rewritten as
+        # a union fusion; value-identical) ----------------------------
+        "bm25_search": q_bm25_search,
         # -- tail (>50): every key holds a CHECKS_r14 row and earns a
         # CHECKS_r15 row (full-registry re-gates at sf0.01); all modules
         # imported by these q bodies are byte-untouched since
         # .round_base (CI: test_registry_tail_modules_untouched_this_round).
-        # The first five left the window for the index-module importers
-        # above, the next fourteen for the operator importers and their
-        # indirect callers; they import only untouched modules.
+        # llm_judge_structured left the window for bm25_search (it
+        # imports no edited module); the next five left it for the
+        # index-module importers above, the next fourteen for the
+        # operator importers and their indirect callers; they import
+        # only untouched modules.
+        "llm_judge_structured": q_llm_judge_structured,
         "pairwise_judge": q_pairwise_judge,
         "orders_rollup": q_orders_rollup,
         "range_join": q_range_join,
@@ -5370,7 +5390,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "weighted_sample": q_weighted_sample,
         "write_shards": q_write_shards,
         "hash_split": q_hash_split,
-        "bm25_search": q_bm25_search,
         "minhash_signature": q_minhash_signature,
         "ngram_stats": q_ngram_stats,
         "pipeline_clean": q_pipeline_clean,
@@ -6061,51 +6080,56 @@ def q_hybrid_search_stored(spark, sf_dir):
         "doc_id", F.round("rrf_score", 6).alias("rrf_score"))
 
 
-def _sql_hybrid_stored(qv: list[float], terms: list[str] | None = None,
-                       vid: int = 0) -> str:
+def _sql_hybrid_stored(qv: list[float]) -> str:
     """DuckDB replay of the stored hybrid: the BM25 relations
     (_sql_bm25_common — the stored path is score-identical to the
     in-hand plan, pinned by bm25_index_search), the full IVF-PQ chain
     (_sql_ivfpq_parts: both quantizer Lloyd's chains under the shared
     sampled-training predicate, probe LIMIT 8, ADC shortlist LIMIT 40,
     exact-cosine rerank), and reciprocal-rank fusion — ranks on the
-    UNROUNDED scores exactly as rrf_fuse's row_number windows do.
-    ``terms``/``vid`` parameterize the query (the batch row replays
-    several); defaults reproduce the single-row SQL byte-identically."""
-    ctes, joins, total = _sql_ivfpq_parts(qv)
-    bm25 = (_SQL_BM25_COMMON if terms is None
-            else _sql_bm25_common(terms))
-    return f"""
-WITH {",".join(ctes)},
-short AS (
-  SELECT ct0.vec_id, ({total}) AS pq_dist
-  FROM ct0 {joins}
-  WHERE ct0.vec_id IN (SELECT vec_id FROM sel)
-  ORDER BY pq_dist, ct0.vec_id LIMIT 40
-),
-ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-qvec AS (SELECT v AS q FROM ev WHERE vec_id = {vid}),
-vecs AS (
-  SELECT ev.vec_id AS doc_id, {_sql_cosine('ev.v', 'qvec.q')} AS score
-  FROM ev JOIN short ON ev.vec_id = short.vec_id, qvec
+    UNROUNDED scores exactly as rrf_fuse's row_number windows do."""
+    ctes, select = _sql_hybrid_stored_parts(qv, _BM25_TERMS, 0)
+    return f"{_sql_with_materialized(ctes)}\n{select}\n"
+
+
+def _sql_hybrid_stored_parts(qv: list[float], terms: list[str], vid: int,
+                             p: str = "") -> tuple[list[str], str]:
+    """(CTEs, final SELECT) of one stored-hybrid replay for query vector
+    ``qv`` (embedding row ``vid``) and BM25 ``terms``. Every
+    query-dependent CTE is named with the prefix ``p``; the corpus-only
+    ones (the quantizer chains, the BM25 encode relations, ``ev``) keep
+    their names and texts, so a multi-query oracle states them once."""
+    ctes, joins, total = _sql_ivfpq_parts(qv, p=p)
+    cos = _sql_cosine("ev.v", f"{p}qvec.q")
+    return ctes + [
+        f"""{p}short AS (
+  SELECT {p}ct0.vec_id, ({total}) AS pq_dist
+  FROM {p}ct0 {joins}
+  WHERE {p}ct0.vec_id IN (SELECT vec_id FROM {p}sel)
+  ORDER BY pq_dist, {p}ct0.vec_id LIMIT 40
+)""",
+        "ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings)",
+        f"{p}qvec AS (SELECT v AS q FROM ev WHERE vec_id = {vid})",
+        f"""{p}vecs AS (
+  SELECT ev.vec_id AS doc_id, {cos} AS score
+  FROM ev JOIN {p}short ON ev.vec_id = {p}short.vec_id, {p}qvec
   ORDER BY score DESC, ev.vec_id LIMIT 10
-),
-{bm25},
-lexs AS (SELECT doc_id, score FROM bm
-         ORDER BY score DESC, doc_id LIMIT 10),
-lex AS (SELECT doc_id,
-        ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS r FROM lexs),
-vec AS (SELECT doc_id,
-        ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS r FROM vecs),
-fused AS (
-  SELECT COALESCE(lex.doc_id, vec.doc_id) AS doc_id,
-    (CASE WHEN lex.r IS NULL THEN 0.0 ELSE 1.0 / (60 + lex.r) END
-     + CASE WHEN vec.r IS NULL THEN 0.0 ELSE 1.0 / (60 + vec.r) END)
+)""",
+    ] + _sql_bm25_parts(terms, p) + [
+        f"""{p}lexs AS (SELECT doc_id, score FROM {p}bm
+         ORDER BY score DESC, doc_id LIMIT 10)""",
+        f"""{p}lex AS (SELECT doc_id,
+        ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS r FROM {p}lexs)""",
+        f"""{p}vec AS (SELECT doc_id,
+        ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS r FROM {p}vecs)""",
+        f"""{p}fused AS (
+  SELECT COALESCE({p}lex.doc_id, {p}vec.doc_id) AS doc_id,
+    (CASE WHEN {p}lex.r IS NULL THEN 0.0 ELSE 1.0 / (60 + {p}lex.r) END
+     + CASE WHEN {p}vec.r IS NULL THEN 0.0 ELSE 1.0 / (60 + {p}vec.r) END)
     AS rrf
-  FROM lex FULL OUTER JOIN vec ON lex.doc_id = vec.doc_id)
-SELECT doc_id, ROUND(rrf, 6) AS rrf_score FROM fused
-ORDER BY rrf DESC, doc_id LIMIT 10
-"""
+  FROM {p}lex FULL OUTER JOIN {p}vec ON {p}lex.doc_id = {p}vec.doc_id)""",
+    ], f"""SELECT doc_id, ROUND(rrf, 6) AS rrf_score FROM {p}fused
+ORDER BY rrf DESC, doc_id LIMIT 10"""
 
 
 # the batched stored-serving row's query set: the standard query plus
@@ -6122,10 +6146,15 @@ _HYBRID_BATCH_VIDS = {"q0": 0, "q1": 1, "q2": 2}
 def q_hybrid_search_stored_batch(spark, sf_dir):
     """BATCHED hybrid serving against the persisted indexes
     (functions/serving.py::hybrid_search_index_batch, NEW r14): three
-    hybrid queries answered in ONE lexical pass over the union of their
-    term buckets (bm25_store.bm25_search_index_batch) + ONE ADC+rerank
-    pass over the union of their probed cells (ann.knn_topk_ivfpq_batch)
-    + ONE per-query RRF fusion (bm25.rrf_fuse_batch) — amortizing the
+    hybrid queries answered by one plan — one lexical pass over the
+    union of their term buckets (bm25_store.bm25_search_index_batch),
+    one ADC+rerank pass over the union of their probed cells
+    (ann.knn_topk_ivfpq_batch), each reaching its per-query top list
+    through one exchange keyed by the query id, and a per-query RRF
+    fusion (bm25.rrf_fuse_batch) that needs no exchange: six Spark jobs
+    with a warm term cache whatever the batch size (AQE runs each
+    exchange and each broadcast as its own job; 11 before the
+    query-keyed exchanges and the union fusion) — amortizing the
     fixed per-query job overhead BENCH_serving.json exposed. Knobs and
     index build match q_hybrid_search_stored exactly, so the oracle is
     the per-query stored-hybrid replay, one UNION ALL branch per query
@@ -6160,16 +6189,36 @@ def q_hybrid_search_stored_batch(spark, sf_dir):
 def _sql_hybrid_stored_batch(qvs: dict[str, list[float]]) -> str:
     """The batch oracle: one _sql_hybrid_stored replay per query id,
     stitched with UNION ALL — the batch API's contract IS per-query
-    equality with Q single calls, so its oracle IS Q single oracles."""
-    branches = []
+    equality with Q single calls, so its oracle IS Q single oracles.
+    The replays share one WITH: the query-independent relations (the
+    IVF and PQ training chains, the BM25 encode relations) are stated
+    once for all branches, where a WITH per branch made DuckDB
+    recompute the whole quantizer training per query."""
+    ctes, selects = {}, []
     for qid in sorted(_HYBRID_BATCH_QUERIES):
         terms = sorted(set(_HYBRID_BATCH_QUERIES[qid].split()))
-        single = _sql_hybrid_stored(
-            qvs[qid], terms=terms, vid=_HYBRID_BATCH_VIDS[qid])
-        branches.append(
-            f"SELECT '{qid}' AS query_id, doc_id, rrf_score "
-            f"FROM (\n{single}\n)")
-    return "\nUNION ALL\n".join(branches)
+        c, select = _sql_hybrid_stored_parts(
+            qvs[qid], terms, _HYBRID_BATCH_VIDS[qid], p=f"{qid}_")
+        ctes.update(dict.fromkeys(c))
+        selects.append(f"SELECT '{qid}' AS query_id, doc_id, rrf_score "
+                       f"FROM (\n{select}\n)")
+    return (_sql_with_materialized(list(ctes)) + "\n"
+            + "\nUNION ALL\n".join(selects))
+
+
+def _sql_with_materialized(ctes: list[str]) -> str:
+    """``WITH`` over ``ctes`` (entries of one or more ``name AS (...)``
+    definitions, each at a line head) with every CTE ``MATERIALIZED``:
+    DuckDB inlines a plain CTE at every reference, so the Lloyd's
+    chains — each iteration reads the previous one twice — were
+    re-expanded per reference and per query (the three-query batch
+    oracle took 145 s and 12 GB at sf0.001; 8 s and 1.2 GB
+    materialized, same rows)."""
+    import re
+
+    return "WITH " + ",\n".join(
+        re.sub(r"(?m)^(\w+) AS \(", r"\1 AS MATERIALIZED (", c)
+        for c in ctes)
 
 
 def q_stored_index_stats(spark, sf_dir):

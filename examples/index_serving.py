@@ -134,9 +134,11 @@ def main() -> None:
                for r in fused.collect()])
 
         # 6b. BATCHED hybrid serving (r14): a deployment's query traffic
-        # arrives in batches — answer Q hybrid queries in THREE jobs
-        # (one bucket-union lexical pass, one cell-union ADC pass, one
-        # fusion) instead of Q job ladders; per query identical to 6.
+        # arrives in batches — answer Q hybrid queries in six Spark jobs
+        # whatever Q (one bucket-union lexical pass and one cell-union
+        # ADC+rerank pass, each reaching its per-query lists through an
+        # exchange keyed by the query id, fused with no exchange)
+        # instead of Q job ladders; per query identical to 6.
         from lotus_spark.functions.serving import hybrid_search_index_batch
 
         texts = {r["doc_id"]: " ".join(r["text"].split()[:4])

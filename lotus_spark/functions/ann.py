@@ -445,6 +445,16 @@ def _sql_str(x) -> str:
     return "'" + str(x).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def _sql_in(col: str, values, lit=str) -> str:
+    """SQL text of ``col IN (v, ...)`` with each value rendered by
+    ``lit``: ONE ``F.expr`` parse where ``F.col(col).isin(values)``
+    pays a py4j round trip per literal (the r14 parse-once idiom). It
+    parses to the same ``In`` over the same literals, so partition
+    pruning and the pushed scan filter are unchanged (PartitionFilters
+    pins in tests/test_plan_shapes.py and tests/test_bm25_store.py)."""
+    return f"`{col}` IN ({', '.join(lit(v) for v in values)})"
+
+
 def _lit_long_array(xs) -> Column:
     """A literal ``array<bigint>`` built with ONE py4j round trip
     (r14): ``F.array(*[F.lit(x) for x in xs])`` costs 2+ gateway calls
@@ -878,7 +888,7 @@ def knn_topk_ivfpq(
             )
         rerank_k = auto_rerank_k(k)
     probe = rank_cells_quantized(centroids, query_vec, n_probe)
-    pruned = indexed_df.filter(F.col(cell_col).isin(probe))
+    pruned = indexed_df.filter(F.expr(_sql_in(cell_col, probe)))
     return knn_topk_pq(
         pruned, codebooks, query_vec, k, id_col=id_col, code_col=code_col,
         rerank_k=rerank_k, emb_col=emb_col, score_col=score_col,
@@ -910,12 +920,18 @@ def knn_topk_ivfpq_batch(
     Why batch: a query's marginal cost at scale is dominated by the
     scan of its probed cells, and concurrent queries' probe sets
     overlap heavily (popular cells). One scan of the UNION serves the
-    whole batch: each scanned row evaluates every query's literal ADC
-    lookup in the same codegen stage (masked to that query's probed
-    cells), so I/O is paid once — the standard ANN serving shape
-    (FAISS also batches query matrices for exactly this reason).
-    Per-row compute is still per-query; the win is the amortized scan +
-    ONE job instead of Q jobs of scheduling.
+    whole batch: each scanned row computes, in the same codegen stage,
+    the literal ADC lookup of only the queries that probe its cell (a
+    ``CASE`` per query — the other queries' entries are NULL and
+    dropped), so I/O is paid once — the standard ANN serving shape
+    (FAISS also batches query matrices for exactly this reason). The
+    job count does not grow with Q: the ADC ranking is one exchange
+    keyed by the query id, and the rerank adds the shortlist broadcast
+    and one more query-keyed exchange — four jobs per batch with the
+    caller's action (two under ``rerank_k=None``), since AQE runs each
+    exchange and each broadcast as its own job. The output is
+    hash-partitioned by ``query_col``, which ``bm25.rrf_fuse_batch``
+    fuses on without a further exchange.
 
     Shape caveat: the per-query top-k uses a window keyed on the query
     id (Q-way parallel, one task per query). For a LARGE single query
@@ -951,7 +967,7 @@ def knn_topk_ivfpq_batch(
     sub = len(codebooks[0][0])
 
     # The whole batch's per-query entries (ADC lookup tables, probed-
-    # cell masks) and the query-vector map assemble as SQL TEXT and
+    # cell guards) and the query-vector map assemble as SQL TEXT and
     # parse in ONE py4j round trip each (r14 2nd cut): the per-Column
     # assembly paid ~650 gateway round trips PER QUERY (profiled at
     # ~1.2 ms each — seconds of driver latency per batch before any job
@@ -963,21 +979,23 @@ def knn_topk_ivfpq_batch(
             raise ValueError(
                 f"query {qid!r} dim {len(qq)} != m*sub = {m * sub}")
         probes[qid] = rank_cells_quantized(centroids, vec, n_probe)
-        cells = ",".join(str(int(c)) for c in probes[qid])
+        # a query's ADC sum is computed only on rows of ITS probed
+        # cells: the CASE short-circuits, and on the other cells it
+        # yields a NULL entry, dropped right after the explode
         entry_sqls.append(
+            f"CASE WHEN {_sql_in(cell_col, probes[qid])} THEN "
             f"named_struct({_sql_str(query_col)}, {_sql_str(qid)}, "
-            f"'pq_dist', {_adc_dist_sql(codebooks, qq, code_col)}, "
-            f"'__m', `{cell_col}` IN ({cells}))")
+            f"'pq_dist', {_adc_dist_sql(codebooks, qq, code_col)}) END")
         qvec_sqls += [_sql_str(qid), _sql_double_array(vec)]
 
     all_cells = sorted({c for p in probes.values() for c in p})
-    pruned = indexed_df.filter(F.col(cell_col).isin(all_cells))
+    pruned = indexed_df.filter(F.expr(_sql_in(cell_col, all_cells)))
     cand = (
         pruned.select(
             id_col,
             F.explode(F.expr("array(" + ",".join(entry_sqls) + ")"))
             .alias("__e"))
-        .select(id_col, "__e.*").filter(F.col("__m")).drop("__m")
+        .filter(F.col("__e").isNotNull()).select(id_col, "__e.*")
     )
     w = Window.partitionBy(query_col).orderBy(
         F.asc("pq_dist"), F.asc(id_col))

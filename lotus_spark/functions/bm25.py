@@ -250,16 +250,27 @@ def rrf_fuse_batch(
     max_list_size: int = 1000,
 ) -> DataFrame:
     """Per-query reciprocal-rank fusion over BATCHED ranked lists (each
-    ``(query_col, id_col, score)``, higher better): for every query id,
-    value-identical to handing that query's slice of each list to
-    :func:`rrf_fuse` (parity-pinned in tests). One plan fuses the whole
-    batch — the windows partition by the query id, so Q queries fuse in
-    one job with Q-way parallelism instead of Q driver round-trips.
+    ``(query_col, id_col, score)``, higher better, an id at most once
+    per query in a list): for every query id, value-identical to handing
+    that query's slice of each list to :func:`rrf_fuse` (parity-pinned
+    in tests). One plan fuses the whole batch — the windows partition by
+    the query id, so Q queries fuse with Q-way parallelism instead of Q
+    driver round-trips.
 
     Same bounding contract as the single-query fusion: each list is cut
     to its per-query top ``max_list_size`` FIRST (a row_number window —
     ranks beyond it contribute < 1/(rrf_k + max_list_size) ≈ nothing),
-    so arbitrary score relations stay safe inputs."""
+    so arbitrary score relations stay safe inputs.
+
+    The lists meet in a ``unionByName`` of their per-list rank columns
+    and ONE ``groupBy(query, id)``, scored by the same
+    :func:`_rrf_contribs_sql` as the single fusion (so the sum order is
+    unchanged). When every list arrives hash-partitioned by the query
+    id — the serving lists do (``bm25_store.bm25_search_index_batch``,
+    ``ann.knn_topk_ivfpq_batch``) — the union keeps that partitioning
+    and the rank windows, the aggregate and the final top-k window run
+    with NO exchange (pinned in tests/test_plan_shapes.py); any other
+    list gets one exchange by the query id, for its rank window."""
     fused = None
     for i, r in enumerate(ranked):
         ranks = (
@@ -269,11 +280,14 @@ def rrf_fuse_batch(
             .filter(F.col(f"__r{i}") <= max_list_size)
             .select(query_col, id_col, f"__r{i}")
         )
-        fused = ranks if fused is None else fused.join(
-            ranks, [query_col, id_col], "full_outer")
+        fused = ranks if fused is None else fused.unionByName(
+            ranks, allowMissingColumns=True)
     total = F.expr(_rrf_contribs_sql(len(ranked), rrf_k))
     return (
-        fused.select(query_col, id_col, total.alias("rrf_score"))
+        fused.groupBy(query_col, id_col)
+        .agg(*[F.max(f"__r{i}").alias(f"__r{i}")
+               for i in range(len(ranked))])
+        .select(query_col, id_col, total.alias("rrf_score"))
         .withColumn("__rk", F.expr(
             f"row_number() OVER (PARTITION BY `{query_col}`"
             f" ORDER BY rrf_score DESC, `{id_col}` ASC)"))

@@ -230,6 +230,27 @@ def _term_buckets(spark, terms: list[str], n_buckets: int) -> list[int]:
     return sorted({_BUCKET_CACHE[(t, n_buckets)] for t in terms})
 
 
+def _scored_hits(spark, path: str, meta: dict, terms: list[str],
+                 k1: float, b: float) -> DataFrame:
+    """The postings of ``terms`` with their Okapi partial ``p``: the
+    terms' buckets prune the postings scan (PartitionFilters — pinned in
+    tests/test_plan_shapes.py), the term IN-filter pushes into it, term
+    df joins as a broadcast, N/avgdl fold in as sidecar literals. Shared
+    by the single and the batched search, so both score identically."""
+    from lotus_spark.functions.ann import _sql_in, _sql_str
+
+    buckets = _term_buckets(spark, terms, meta["n_buckets"])
+    where = F.expr(f"{_sql_in('bucket', buckets)}"
+                   f" AND {_sql_in('term', terms, _sql_str)}")
+    posts = _read_index_table(spark, path, "postings", meta).filter(where)
+    tdf = (_read_index_table(spark, path, "termdf", meta).filter(where)
+           .select("term", "df"))
+    n = float(meta["n_docs"])
+    avgdl = float(meta["total_dl"]) / float(meta["n_docs"])
+    return posts.join(F.broadcast(tdf), "term").withColumn(
+        "p", F.expr(_bm25_partial_sql(n, avgdl, k1, b)))
+
+
 def bm25_search_index(
     spark,
     path: str,
@@ -239,36 +260,25 @@ def bm25_search_index(
     b: float = 0.75,
 ) -> DataFrame:
     """Top-``k`` lexical search against the persisted index. Plan: the
-    query terms' buckets prune the postings scan (PartitionFilters —
-    pinned in tests/test_plan_shapes.py), the term IN-filter pushes into
-    it, term df joins as a broadcast, N/avgdl fold in as sidecar
-    literals, and the decimal score accumulation + top-k match
+    query terms' postings with their partials (:func:`_scored_hits`),
+    and the decimal score accumulation + top-k match
     ``bm25.bm25_search`` bit for bit. Nothing proportional to corpus or
     vocabulary size is read, shuffled, or collected."""
-    meta = read_bm25_meta(spark, path)
+    return _bm25_search_index(spark, path, read_bm25_meta(spark, path),
+                              query, k, k1, b)
+
+
+def _bm25_search_index(spark, path: str, meta: dict, query: str,
+                       k: int, k1: float, b: float) -> DataFrame:
+    """:func:`bm25_search_index` over an already-read sidecar ``meta``
+    (the hybrid serving path reads it once per call)."""
     if not int(meta["n_docs"]):
         raise ValueError("bm25_search_index: the index is empty")
     terms = sorted(set(query.strip().lower().split()))
     if not terms:
         raise ValueError("empty query")
-    buckets = _term_buckets(spark, terms, meta["n_buckets"])
-
-    posts = (
-        _read_index_table(spark, path, "postings", meta)
-        .filter(F.col("bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-    )
-    tdf = (
-        _read_index_table(spark, path, "termdf", meta)
-        .filter(F.col("bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-        .select("term", "df")
-    )
-    n = float(meta["n_docs"])
-    avgdl = float(meta["total_dl"]) / float(meta["n_docs"])
-    hits = posts.join(F.broadcast(tdf), "term")
     return (
-        hits.withColumn("p", F.expr(_bm25_partial_sql(n, avgdl, k1, b)))
+        _scored_hits(spark, path, meta, terms, k1, b)
         .groupBy("id").agg(F.sum("p").cast("double").alias("score"))
         .orderBy(F.desc("score"), F.asc("id")).limit(k)
         .withColumnRenamed("id", meta["id_col"])
@@ -299,14 +309,29 @@ def bm25_search_index_batch(
     BENCH_serving.json), not by the bounded bytes it reads. Concurrent
     queries' bucket sets overlap (popular terms), so one scan of the
     bucket UNION serves the whole batch: each posting row fans out to
-    the queries containing its term via a broadcast of the tiny
-    (query, term) membership relation, scores accumulate per
-    ``(query, id)`` with the SAME rounded-decimal partials as the
-    single path, and the per-query top-k is one window over a bounded
-    relation. Q queries cost ONE job of scheduling instead of Q — the
-    lexical twin of ``ann.knn_topk_ivfpq_batch``, and the same reason
-    production BM25 stacks batch their query traffic."""
-    meta = read_bm25_meta(spark, path)
+    the queries containing its term through a literal
+    ``map(term -> array(query ids))`` (no join, no broadcast), and the
+    scored hits are hash-partitioned by the query id ONCE — the
+    ``(query, id)`` decimal sum (the SAME rounded-decimal partials as
+    the single path) and the per-query top-k window both run on that
+    one exchange. Two jobs whatever Q is: the term-df broadcast and the
+    query-keyed exchange (AQE runs each broadcast and each exchange as
+    its own job), then the caller's action — the lexical twin of
+    ``ann.knn_topk_ivfpq_batch``. The output stays hash-partitioned by
+    ``query_col``, which ``bm25.rrf_fuse_batch`` fuses on without a
+    further exchange."""
+    return _bm25_search_index_batch(
+        spark, path, read_bm25_meta(spark, path), queries, k, k1, b,
+        query_col)
+
+
+def _bm25_search_index_batch(spark, path: str, meta: dict, queries: dict,
+                             k: int, k1: float, b: float,
+                             query_col: str) -> DataFrame:
+    """:func:`bm25_search_index_batch` over an already-read sidecar
+    ``meta`` (the hybrid serving path reads it once per call)."""
+    from lotus_spark.functions.ann import _sql_str
+
     if not int(meta["n_docs"]):
         raise ValueError("bm25_search_index_batch: the index is empty")
     if not queries:
@@ -315,49 +340,25 @@ def bm25_search_index_batch(
         raise ValueError(
             "bm25_search_index_batch: query ids collide after str() — "
             f"{sorted(str(q) for q in queries)}; use distinct string ids")
-    qterms: dict[str, list[str]] = {}
+    term_queries: dict[str, list[str]] = {}
     for qid, text in queries.items():
         terms = sorted(set(str(text).strip().lower().split()))
         if not terms:
             raise ValueError(f"empty query for id {qid!r}")
-        qterms[str(qid)] = terms
-    all_terms = sorted({t for ts in qterms.values() for t in ts})
-    buckets = _term_buckets(spark, all_terms, meta["n_buckets"])
-
-    posts = (
-        _read_index_table(spark, path, "postings", meta)
-        .filter(F.col("bucket").isin(buckets))
-        .filter(F.col("term").isin(all_terms))
-    )
-    tdf = (
-        _read_index_table(spark, path, "termdf", meta)
-        .filter(F.col("bucket").isin(buckets))
-        .filter(F.col("term").isin(all_terms))
-        .select("term", "df")
-    )
-    # the (query, term) membership relation as an inline VALUES table
-    # (LocalRelation), not createDataFrame: the latter plans a
-    # Python-RDD scan, so EVERY execution of the broadcast spun up a
-    # Python worker just to emit these few rows — this keeps the
-    # lexical serving path entirely JVM-side (guide §4: eliminate the
-    # boundary) and parses in one call
-    from lotus_spark.functions.ann import _sql_str
-
-    rows = ",".join(f"({_sql_str(qid)}, {_sql_str(t)})"
-                    for qid, ts in qterms.items() for t in ts)
-    membership = spark.sql(
-        f"SELECT * FROM VALUES {rows} AS t(`{query_col}`, term)")
-    n = float(meta["n_docs"])
-    avgdl = float(meta["total_dl"]) / float(meta["n_docs"])
-    hits = (posts.join(F.broadcast(tdf), "term")
-            .join(F.broadcast(membership), "term"))
-    scored = (
-        hits.withColumn("p", F.expr(_bm25_partial_sql(n, avgdl, k1, b)))
+        for t in terms:
+            term_queries.setdefault(t, []).append(str(qid))
+    all_terms = sorted(term_queries)
+    fan_out = "map(" + ", ".join(
+        f"{_sql_str(t)}, array({', '.join(map(_sql_str, term_queries[t]))})"
+        for t in all_terms) + ")"
+    return (
+        _scored_hits(spark, path, meta, all_terms, k1, b)
+        .select("id", "p", F.explode(F.expr(f"{fan_out}[term]"))
+                .alias(query_col))
+        .repartition(query_col)
         .groupBy(query_col, "id")
         .agg(F.sum("p").cast("double").alias("score"))
-    )
-    return (
-        scored.withColumn("__rk", F.expr(
+        .withColumn("__rk", F.expr(
             f"row_number() OVER (PARTITION BY `{query_col}`"
             f" ORDER BY score DESC, id ASC)"))
         .filter(F.col("__rk") <= k)

@@ -332,7 +332,7 @@ def neardup_join_index(
     else:
         qb, qs = _encode(query_df, text_col, id_col, n_hashes,
                          meta["bands"], meta["shingle_n"])
-    corpus_buckets = spark.read.parquet(f"{path}/buckets")
+    corpus_buckets, corpus_sigs = _tables(spark, path, meta)
     cand = (
         qb.withColumnRenamed("id", "__qid")
         .join(corpus_buckets, "band")
@@ -384,7 +384,7 @@ def neardup_join_index(
             .filter(F.col(score_col) >= threshold)
             .select(F.col("__qid").alias(id_col), match_col, score_col)
         )
-    corpus_sigs = spark.read.parquet(f"{path}/sigs").select(
+    corpus_sigs = corpus_sigs.select(
         F.col("id").alias(match_col), F.col("minhash").alias("__msig"))
     qsigs = qs.select(F.col("id").alias("__qid"),
                       F.col("minhash").alias("__qsig"))

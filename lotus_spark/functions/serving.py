@@ -57,16 +57,17 @@ def hybrid_search_index(
     )
     from lotus_spark.functions.bm25 import rrf_fuse
     from lotus_spark.functions.bm25_store import (
-        bm25_search_index, read_bm25_meta,
+        _bm25_search_index, read_bm25_meta,
     )
 
     if rerank_k is None:
         raise ValueError(
             "hybrid_search_index: rerank_k=None (raw-ADC opt-out) has no "
             "cosine score to rank for fusion — pass an int or 'auto'")
-    out_id = read_bm25_meta(spark, bm25_path)["id_col"]
-    lex = bm25_search_index(spark, bm25_path, query_text, k=lexical_k,
-                            k1=k1, b=b)
+    bm25_meta = read_bm25_meta(spark, bm25_path)
+    out_id = bm25_meta["id_col"]
+    lex = _bm25_search_index(spark, bm25_path, bm25_meta, query_text,
+                             lexical_k, k1, b)
 
     stored, meta = _read_ivfpq_index_with_meta(spark, ivfpq_path)
     vec = knn_topk_ivfpq(
@@ -96,15 +97,23 @@ def hybrid_search_index_batch(
     query_col: str = "query_id",
 ) -> DataFrame:
     """Batched hybrid serving: answer MANY hybrid queries against the
-    two persisted indexes in THREE jobs total (one lexical pass over
-    the union of the batch's term buckets, one ADC+rerank pass over the
-    union of the probed cells, one fusion) instead of Q × the
-    single-query job ladder. ``queries`` maps a query id to
-    ``(query_text, query_vec)``; returns ``(query_col, id, rrf_score)``
-    with top-``k`` rows per query — per query VALUE-IDENTICAL to
-    :func:`hybrid_search_index` with the same knobs (parity-pinned in
-    tests/test_serving.py and hash-pinned by the
-    ``hybrid_search_stored_batch`` oracle row).
+    two persisted indexes in ONE plan of six Spark jobs whatever the
+    batch size, once the query terms' buckets are cached (measured on
+    the 16-query ``index_serving`` benchmark batch; AQE runs each
+    exchange and each broadcast as its own job): the term-df broadcast
+    and ONE query-keyed exchange for the lexical pass over the union of
+    the batch's term buckets, ONE query-keyed exchange for the ADC
+    ranking over the union of the probed cells, the rerank shortlist
+    broadcast and ONE query-keyed rerank exchange, then the result
+    stage, where the per-query RRF fusion and top-k run with no
+    exchange (the two lists share their hash partitioning by the query
+    id). ``queries`` maps a query id to ``(query_text, query_vec)``;
+    returns ``(query_col, id, rrf_score)`` with top-``k`` rows per
+    query — per query VALUE-IDENTICAL to :func:`hybrid_search_index`
+    with the same knobs (parity-pinned in tests/test_serving.py and
+    hash-pinned by the ``hybrid_search_stored_batch`` oracle row; job
+    count and plan pinned in tests/test_serving.py and
+    tests/test_plan_shapes.py).
 
     Why this exists: BENCH_serving.json showed the warm stored query at
     sf0.1 spending ~3× the in-hand wall despite reading 3–4× fewer
@@ -122,7 +131,7 @@ def hybrid_search_index_batch(
     )
     from lotus_spark.functions.bm25 import rrf_fuse_batch
     from lotus_spark.functions.bm25_store import (
-        bm25_search_index_batch, read_bm25_meta,
+        _bm25_search_index_batch, read_bm25_meta,
     )
 
     if rerank_k is None:
@@ -137,10 +146,12 @@ def hybrid_search_index_batch(
             raise ValueError(
                 f"query {qid!r}: expected (query_text, query_vec), "
                 f"got {type(tv).__name__}")
-    out_id = read_bm25_meta(spark, bm25_path)["id_col"]
-    lex = bm25_search_index_batch(
-        spark, bm25_path, {qid: tv[0] for qid, tv in queries.items()},
-        k=lexical_k, k1=k1, b=b, query_col=query_col)
+    bm25_meta = read_bm25_meta(spark, bm25_path)
+    out_id = bm25_meta["id_col"]
+    lex = _bm25_search_index_batch(
+        spark, bm25_path, bm25_meta,
+        {qid: tv[0] for qid, tv in queries.items()},
+        lexical_k, k1, b, query_col)
 
     stored, meta = _read_ivfpq_index_with_meta(spark, ivfpq_path)
     vec = knn_topk_ivfpq_batch(

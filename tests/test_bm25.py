@@ -99,3 +99,60 @@ def test_rrf_contribs_sql_tree_matches_columns(spark):
         pn = df.select(new.alias("rrf_score"))._jdf.queryExecution() \
             .analyzed().toString()
         assert strip(po) == strip(pn), (po, pn)
+
+
+def test_rrf_fuse_batch_matches_single_fusion_per_query(spark):
+    """rrf_fuse_batch over three query-partitioned lists == rrf_fuse on
+    each query's slices, ids and scores equal — including a query found
+    in one list only. More shuffle partitions than queries and a small
+    advisory partition size make AQE coalesce the union's children; the
+    fusion must still see every (query, id) of every list in one task."""
+    import random
+
+    from lotus_spark.functions.bm25 import rrf_fuse_batch
+    from tests.test_plan_shapes import final_plan_above_union
+
+    rng = random.Random(3)
+    spec = [  # per list: {query: number of ranked ids}
+        {"q0": 300, "q1": 200, "q2": 150, "q3": 100},
+        {"q0": 12, "q1": 25},
+        {"q0": 30, "q2": 8, "q4": 15},  # q4 is in this list only
+    ]
+    rows = [[(q, rng.randrange(400), round(rng.random(), 2))
+             for q, n in s.items() for _ in range(n)] for s in spec]
+    # one row per (query, id) in a ranked list
+    rows = [list({(q, d): (q, d, x) for q, d, x in rs}.values())
+            for rs in rows]
+    schema = "query_id string, doc_id long, score double"
+    conf = {"spark.sql.shuffle.partitions": "32",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "512"}
+    saved = {key: spark.conf.get(key, None) for key in conf}
+    try:
+        for key, v in conf.items():
+            spark.conf.set(key, v)
+        lists = [spark.createDataFrame(rs, schema).repartition("query_id")
+                 for rs in rows]
+        fused = rrf_fuse_batch(lists, "doc_id", k=10, rrf_k=60)
+        got = {}
+        for r in fused.collect():
+            got.setdefault(r["query_id"], []).append(
+                (r["doc_id"], r["rrf_score"]))
+        assert "Exchange" not in final_plan_above_union(fused)
+        plan = fused._jdf.queryExecution().executedPlan().toString()
+        assert "AQEShuffleRead coalesced" in plan.split(
+            "== Initial Plan ==")[0]
+    finally:
+        for key, v in saved.items():
+            if v is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, v)
+    queries = sorted({q for s in spec for q in s})
+    assert sorted(got) == queries
+    for q in queries:
+        slices = [spark.createDataFrame(
+            [(d, x) for qq, d, x in rs if qq == q], "doc_id long, score double")
+            for rs in rows]
+        want = [(r["doc_id"], r["rrf_score"]) for r in
+                rrf_fuse(slices, "doc_id", k=10, rrf_k=60).collect()]
+        assert sorted(got[q], key=lambda t: (-t[1], t[0])) == want, q

@@ -49,6 +49,26 @@ def test_minhash_index_roundtrip_probe_and_dedup(spark, tmp_path):
     assert {r["doc_id"] for r in kept.collect()} == {103}
 
 
+def test_neardup_join_index_probe_build_launches_no_job(
+        spark, tmp_path, spark_state):
+    """The probe reads ``buckets`` and ``sigs`` with the sidecar's
+    pinned schema, so building it on a pinned index runs no Spark job
+    (an inferring read runs a footer job per table per probe)."""
+    from lotus_spark.functions.dedup_index import (
+        neardup_join_index, write_minhash_index,
+    )
+
+    path = str(tmp_path / "mh")
+    write_minhash_index(_docs(spark, BASE), path, "text", "doc_id",
+                        n_hashes=16, bands=4)
+    inc = _docs(spark, [(101, BASE[0][1]), (103, "novel text here")])
+    built = []
+    assert spark_state.jobs(lambda: built.append(neardup_join_index(
+        spark, path, inc, "text", "doc_id", threshold=0.5))) == 0
+    assert {(r["doc_id"], r["match_id"]) for r in built[0].collect()} \
+        == {(101, 1)}
+
+
 def test_minhash_index_append_equals_fresh_write(spark, tmp_path):
     """append with PINNED meta == from-scratch write of the union, row
     for row in both tables (the train-once/add-many parity the IVF-PQ

@@ -32,6 +32,18 @@ def exchanges(plan: str) -> list:
     return out
 
 
+def final_plan_above_union(df) -> str:
+    """The operators above the first ``Union`` in ``df``'s executed plan
+    (AQE's final plan once an action has run) — where an exchange would
+    show if the union lost its children's common partitioning."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "== Final Plan ==" in plan:
+        plan = plan.split("== Final Plan ==")[1].split(
+            "== Initial Plan ==")[0]
+    assert "Union" in plan, plan
+    return plan[:plan.index("Union")]
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     rows = [(i, f"src{i % 3}", "en",
@@ -520,3 +532,31 @@ def test_lsh_self_join_exchanges_exclude_shingles(spark, docs):
             assert "text" not in cols, (args, cols)
     finally:
         sigd.unpersist(False)
+
+
+def test_hybrid_batch_fuses_without_exchange_or_outer_join(
+        spark, tmp_path):
+    """hybrid_search_index_batch's plan: each side reaches its per-query
+    top list through ONE exchange keyed by the query id (lexical: the
+    scored hits; vector: the ADC ranking, then the rerank), and the RRF
+    fusion is a union of the two query-partitioned lists — no full
+    outer join, and no exchange between the union and the final top-k
+    window (Spark keeps a union's common hash partitioning; if an
+    upgrade drops it, this pin fails)."""
+    from lotus_spark.functions.serving import hybrid_search_index_batch
+    from tests.test_serving import batch_queries, build_indexes
+
+    bm_path, iv_path, vecs = build_indexes(spark, tmp_path)
+    out = hybrid_search_index_batch(
+        spark, bm_path, iv_path, batch_queries(vecs), k=6, lexical_k=5,
+        vector_k=5, n_probe=2, rerank_k=8, vector_id_col="doc_id")
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "FullOuter" not in plan
+    above = final_plan_above_union(out)
+    assert "Exchange" not in above and "Window" in above
+    final = plan.split("== Initial Plan ==")[0]
+    shuffles = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", final)
+    assert len(shuffles) == 3, shuffles
+    assert all(re.fullmatch(r"query_id#\d+, \d+", s) for s in shuffles), \
+        shuffles

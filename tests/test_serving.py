@@ -66,19 +66,13 @@ def test_hybrid_search_index_matches_inhand_fusion(spark, tmp_path):
                             rerank_k=None)
 
 
-def test_hybrid_batch_matches_singles(spark, tmp_path):
-    """hybrid_search_index_batch == Q independent hybrid_search_index
-    calls with the same knobs, per query — ids and rrf_scores equal,
-    including a query whose lexical terms miss the corpus (the vector
-    list alone feeds its fusion, exactly as the single path fuses an
-    empty lexical frame)."""
+def build_indexes(spark, tmp_path):
+    """The BM25 and IVF-PQ indexes over ``DOCS`` → (bm25 path, ivfpq
+    path, {doc_id: embedding})."""
     from lotus_spark.functions.ann import (
         ivf_index, pq_index, write_ivfpq_index,
     )
     from lotus_spark.functions.bm25_store import write_bm25_index
-    from lotus_spark.functions.serving import (
-        hybrid_search_index, hybrid_search_index_batch,
-    )
 
     docs, emb, _qv = _corpus(spark)
     vecs = {r["doc_id"]: [float(x) for x in r["embedding"]]
@@ -91,12 +85,30 @@ def test_hybrid_batch_matches_singles(spark, tmp_path):
     encoded, books = pq_index(indexed, "embedding", "doc_id", m=4,
                               nbits=2, seed=5)
     write_ivfpq_index(encoded, iv_path, cents, books)
+    return bm_path, iv_path, vecs
 
-    queries = {
+
+def batch_queries(vecs):
+    """The three-query batch the batch tests serve (one lexical miss)."""
+    return {
         "q0": (QUERY, vecs[0]),
         "q1": ("pasta cooking text", vecs[5]),
         "q2": ("zzz qqq", vecs[3]),  # lexical vocabulary miss
     }
+
+
+def test_hybrid_batch_matches_singles(spark, tmp_path):
+    """hybrid_search_index_batch == Q independent hybrid_search_index
+    calls with the same knobs, per query — ids and rrf_scores equal,
+    including a query whose lexical terms miss the corpus (the vector
+    list alone feeds its fusion, exactly as the single path fuses an
+    empty lexical frame)."""
+    from lotus_spark.functions.serving import (
+        hybrid_search_index, hybrid_search_index_batch,
+    )
+
+    bm_path, iv_path, vecs = build_indexes(spark, tmp_path)
+    queries = batch_queries(vecs)
     knobs = dict(k=6, lexical_k=5, vector_k=5, n_probe=2,
                  rerank_k=len(DOCS), vector_id_col="doc_id")
     got = hybrid_search_index_batch(
@@ -119,6 +131,23 @@ def test_hybrid_batch_matches_singles(spark, tmp_path):
     with pytest.raises(ValueError, match="expected"):
         hybrid_search_index_batch(spark, bm_path, iv_path,
                                   {"a": "just text"})
+
+
+def test_hybrid_batch_runs_in_six_jobs(spark, tmp_path, spark_state):
+    """With the query terms' buckets cached, one batch submits at most
+    six Spark jobs whatever its size — the term-df broadcast, the
+    lexical exchange, the ADC exchange, the shortlist broadcast, the
+    rerank exchange and the result (AQE runs each exchange and each
+    broadcast as its own job)."""
+    from lotus_spark.functions.serving import hybrid_search_index_batch
+
+    bm_path, iv_path, vecs = build_indexes(spark, tmp_path)
+    knobs = dict(k=6, lexical_k=5, vector_k=5, n_probe=2, rerank_k=8,
+                 vector_id_col="doc_id")
+    hybrid_search_index_batch(  # puts the terms in the bucket cache
+        spark, bm_path, iv_path, batch_queries(vecs), **knobs).collect()
+    assert spark_state.jobs(lambda: hybrid_search_index_batch(
+        spark, bm_path, iv_path, batch_queries(vecs), **knobs).collect()) <= 6
 
 
 def test_cluster_map_cdc_stability_and_sync(spark, tmp_path):
