@@ -1300,7 +1300,7 @@ def _sql_ivfpq_parts(
 def _sql_knn_ivfpq(qv: list[float]) -> str:
     ctes, joins, total = _sql_ivfpq_parts(qv)
     return (
-        "WITH " + ",\n".join(ctes)
+        _sql_with_materialized(ctes)
         + f"""
 SELECT ct0.vec_id, ({total}) AS pq_dist
 FROM ct0 {joins}
@@ -1326,17 +1326,17 @@ def _sql_knn_ivfpq_rerank(
             "evq AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v "
             "FROM embeddings),\n"
             "qv AS (SELECT v AS q FROM evq WHERE vec_id = 0)")
-    return (
-        "WITH " + ",\n".join((extra_ctes or []) + ctes)
-        + f""",
-short AS (
+    short = f"""short AS (
   SELECT ct0.vec_id, ({total}) AS pq_dist
   FROM ct0 {joins}
   WHERE ct0.vec_id IN (SELECT vec_id FROM sel)
   ORDER BY pq_dist, ct0.vec_id LIMIT 40
-),
-ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM {src}),
-{qv_ctes}
+)"""
+    ev = f"ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM {src})"
+    return (
+        _sql_with_materialized(
+            (extra_ctes or []) + ctes + [short, ev, qv_ctes])
+        + f"""
 SELECT ev.vec_id, ROUND({_sql_cosine('ev.v', 'qv.q')}, 6) AS score
 FROM ev JOIN short ON ev.vec_id = short.vec_id, qv
 ORDER BY {_sql_cosine('ev.v', 'qv.q')} DESC, ev.vec_id
@@ -3606,15 +3606,16 @@ def q_streaming_heavy_hitters(spark, sf_dir):
     import uuid
 
     from lotus_spark.streaming.ops import (
-        input_sized_state_partitions,
         read_parquet_stream,
-        scoped_shuffle_partitions,
+        state_sized_session,
         streaming_heavy_hitters,
     )
 
+    child = state_sized_session(  # guide §2.2
+        spark, f"{sf_dir}/documents.parquet")
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = read_parquet_stream(
-        spark, sf_dir, schema, glob="documents.parquet"
+        child, sf_dir, schema, glob="documents.parquet"
     )
     stream = stream.withColumn(
         "ts", F.timestamp_seconds(F.col("doc_id") % 600 + 60)
@@ -3623,15 +3624,12 @@ def q_streaming_heavy_hitters(spark, sf_dir):
         stream, "text", "ts", window="1 minute", capacity=64, k=5
     )
     qname = f"oracle_hh_{uuid.uuid4().hex[:8]}"
-    n_state = input_sized_state_partitions(  # guide §2.2
-        spark, f"{sf_dir}/documents.parquet")
-    with scoped_shuffle_partitions(spark, n_state):
-        q = (
-            hh.writeStream.format("memory").queryName(qname)
-            .outputMode("update").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(qname).select(
+    q = (
+        hh.writeStream.format("memory").queryName(qname)
+        .outputMode("update").trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    return child.table(qname).select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss")
         .alias("window_start"),
         "term",
@@ -3995,9 +3993,8 @@ def q_neardup_index_stream(spark, sf_dir):
         neardup_matches_stream, write_minhash_index,
     )
     from lotus_spark.streaming.ops import (
-        input_sized_state_partitions,
         read_parquet_stream,
-        scoped_shuffle_partitions,
+        state_sized_session,
     )
 
     docs = _t(spark, sf_dir, "documents")
@@ -4006,21 +4003,20 @@ def q_neardup_index_stream(spark, sf_dir):
         path = f"{d}/idx"
         write_minhash_index(docs.filter("doc_id % 2 = 0"), path,
                             "text", "doc_id", n_hashes=16, bands=4)
+        child = state_sized_session(  # guide §2.2
+            spark, f"{sf_dir}/documents.parquet")
         schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
         stream = read_parquet_stream(
-            spark, sf_dir, schema, glob="documents.parquet"
+            child, sf_dir, schema, glob="documents.parquet"
         ).filter("doc_id % 2 = 1").withColumn(
             "ts", F.timestamp_seconds(F.col("doc_id") % 600 + 60))
-        out = neardup_matches_stream(spark, path, stream, "text",
+        out = neardup_matches_stream(child, path, stream, "text",
                                      "doc_id", "ts", threshold=0.5)
         qname = f"oracle_mhidx_{uuid.uuid4().hex[:8]}"
-        n_state = input_sized_state_partitions(  # guide §2.2
-            spark, f"{sf_dir}/documents.parquet")
-        with scoped_shuffle_partitions(spark, n_state):
-            q = (out.writeStream.format("memory").queryName(qname)
-                 .outputMode("append").trigger(availableNow=True).start())
-            q.awaitTermination()
-        got = spark.table(qname)
+        q = (out.writeStream.format("memory").queryName(qname)
+             .outputMode("append").trigger(availableNow=True).start())
+        q.awaitTermination()
+        got = child.table(qname)
         return spark.createDataFrame(
             [(r["doc_id"], r["match_id"], r["est_jaccard"])
              for r in got.collect()],
@@ -4349,13 +4345,14 @@ def _sql_embedding_neardup_index(
         f"(l.xq[{j}]-c3.v[{j}])*(l.xq[{j}]-c3.v[{j}])"
         for j in range(1, d + 1)
     )
-    pq_chains = [
+    # one chain per line head, where _sql_with_materialized finds them
+    pq_chains = ",\n".join(
         _sql_kmeans_ctes(
             k=2 ** nbits, iters=iters, seed=101 + s, d=sub,
             emb_expr=f"embedding[{s * sub + 1}:{(s + 1) * sub}]",
             p=f"eq{s}_", train_where=corpus_where)
         for s in range(m)
-    ]
+    )
     pair_joins = " ".join(
         f"JOIN eq{s}_p lp{s} ON lp{s}.vec_id = l.qid "
         f"JOIN eq{s}_afinal ra{s} ON ra{s}.vec_id = rc.match_id "
@@ -4368,7 +4365,7 @@ def _sql_embedding_neardup_index(
     )
     ctes = f"""{_sql_kmeans_ctes(k=16, iters=iters, seed=42, d=d,
                        train_where=corpus_where)},
-{",".join(pq_chains)},
+{pq_chains},
 e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
 probe AS (
   SELECT l.vec_id AS qid, c3.c,
@@ -4412,7 +4409,7 @@ rk AS (SELECT qid, match_id, score,
         # and DuckDB would otherwise re-inline (re-run) the whole
         # quantizer+probe+ADC stack per reference
         return (f"{ctes},\nprobe_matches AS MATERIALIZED ({final})")
-    return f"\nWITH {ctes}\n{final}\n"
+    return f"\n{_sql_with_materialized([ctes])}\n{final}\n"
 
 
 def q_embedding_cluster_assign(spark, sf_dir):
@@ -5624,35 +5621,34 @@ def q_streaming_doc_stats(spark, sf_dir):
     import uuid
 
     from lotus_spark.streaming.ops import (
-        input_sized_state_partitions,
         read_parquet_stream,
-        scoped_shuffle_partitions,
+        state_sized_session,
         windowed_doc_stats,
     )
 
+    # the stream's own session, its state-store partition count derived
+    # from per-trigger input bytes (guide §2.2): every micro-batch
+    # commits every state partition, so a core-count-sized default is
+    # pure fixed overhead here. floor=1: the token/quality expressions
+    # aggregate map-side (partials), so the state op only merges ~one
+    # row per window
+    child = state_sized_session(
+        spark, f"{sf_dir}/documents.parquet", floor=1)
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = read_parquet_stream(
-        spark, sf_dir, schema, glob="documents.parquet"
+        child, sf_dir, schema, glob="documents.parquet"
     )
     stream = stream.withColumn(
         "ts", F.timestamp_seconds(F.col("doc_id") % 600)
     )
     stats = windowed_doc_stats(stream, "text", "ts", window="1 minute")
     qname = f"oracle_stream_{uuid.uuid4().hex[:8]}"
-    # state-store partition count derived from per-trigger input bytes
-    # (guide §2.2): every micro-batch commits every state partition, so
-    # a core-count-sized default is pure fixed overhead here. floor=1:
-    # the token/quality expressions aggregate map-side (partials), so
-    # the state op only merges ~one row per window
-    n_state = input_sized_state_partitions(
-        spark, f"{sf_dir}/documents.parquet", floor=1)
-    with scoped_shuffle_partitions(spark, n_state):
-        q = (
-            stats.writeStream.format("memory").queryName(qname)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(qname).select(
+    q = (
+        stats.writeStream.format("memory").queryName(qname)
+        .outputMode("complete").trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    return child.table(qname).select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss")
         .alias("window_start"),
         F.date_format("window_end", "yyyy-MM-dd HH:mm:ss")
@@ -5705,31 +5701,28 @@ def q_streaming_sessions(spark, sf_dir):
     import uuid
 
     from lotus_spark.streaming.ops import (
-        input_sized_state_partitions,
         read_parquet_stream,
-        scoped_shuffle_partitions,
+        state_sized_session,
         sessionized_stats,
     )
 
+    # input-derived state-partition count (guide §2.2): the session
+    # state machinery commits every partition per micro-batch
+    child = state_sized_session(spark, f"{sf_dir}/events.parquet")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = read_parquet_stream(spark, sf_dir, schema, glob="events.parquet")
+    stream = read_parquet_stream(child, sf_dir, schema, glob="events.parquet")
     # watermarks demand TIMESTAMP (LTZ); NTZ→LTZ is identity under the
     # UTC session
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     out = sessionized_stats(stream, "ts", "user_id", gap="30 minutes",
                             watermark="0 seconds")
     qname = f"oracle_sessions_{uuid.uuid4().hex[:8]}"
-    # input-derived state-partition count (guide §2.2): the session
-    # state machinery commits every partition per micro-batch
-    n_state = input_sized_state_partitions(
-        spark, f"{sf_dir}/events.parquet")
-    with scoped_shuffle_partitions(spark, n_state):
-        q = (
-            out.writeStream.format("memory").queryName(qname)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(qname).select(
+    q = (
+        out.writeStream.format("memory").queryName(qname)
+        .outputMode("append").trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    return child.table(qname).select(
         "user_id",
         F.date_format("session_start", "yyyy-MM-dd HH:mm:ss")
         .alias("session_start"),
@@ -5777,15 +5770,20 @@ def q_streaming_neardup(spark, sf_dir):
 
     from lotus_spark.functions.dedup import simhash_expr
     from lotus_spark.streaming.ops import (
-        input_sized_state_partitions,
         read_parquet_stream,
-        scoped_shuffle_partitions,
+        state_sized_session,
         streaming_neardup,
     )
 
+    # input-derived state-partition count (guide §2.2); the fingerprint
+    # stage keeps the repartition parallelism below — only the dedup
+    # state exchange narrows, and its per-row state work is an O(1)
+    # lookup (floor=1: partitions are pure commit overhead here)
+    child = state_sized_session(
+        spark, f"{sf_dir}/documents.parquet", floor=1)
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = read_parquet_stream(
-        spark, sf_dir, schema, glob="documents.parquet"
+        child, sf_dir, schema, glob="documents.parquet"
     )
     # +60: a row whose event time IS epoch 0 sits at the initial
     # watermark and dropDuplicatesWithinWatermark discards it as late
@@ -5803,19 +5801,12 @@ def q_streaming_neardup(spark, sf_dir):
     out = streaming_neardup(stream, "text", "ts", watermark="10 minutes",
                             bits=16, n_bits=30)
     qname = f"oracle_neardup_{uuid.uuid4().hex[:8]}"
-    # input-derived state-partition count (guide §2.2); the fingerprint
-    # stage keeps the repartition parallelism above — only the dedup
-    # state exchange narrows, and its per-row state work is an O(1)
-    # lookup (floor=1: partitions are pure commit overhead here)
-    n_state = input_sized_state_partitions(
-        spark, f"{sf_dir}/documents.parquet", floor=1)
-    with scoped_shuffle_partitions(spark, n_state):
-        q = (
-            out.writeStream.format("memory").queryName(qname)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    surv = spark.table(qname)
+    q = (
+        out.writeStream.format("memory").queryName(qname)
+        .outputMode("append").trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    surv = child.table(qname)
     bucket = F.pmod(simhash_expr(F.col("text"), n_bits=30),
                     F.lit(2 ** 16)).cast("long")
     return surv.select(bucket.alias("bucket"))
@@ -5858,15 +5849,16 @@ def q_streaming_neardup_minhash(spark, sf_dir):
 
     from lotus_spark.functions.dedup import minhash_expr
     from lotus_spark.streaming.ops import (
-        input_sized_state_partitions,
         read_parquet_stream,
-        scoped_shuffle_partitions,
+        state_sized_session,
         streaming_neardup_minhash,
     )
 
+    child = state_sized_session(  # guide §2.2, see above
+        spark, f"{sf_dir}/documents.parquet", floor=1)
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = read_parquet_stream(
-        spark, sf_dir, schema, glob="documents.parquet"
+        child, sf_dir, schema, glob="documents.parquet"
     )
     stream = stream.withColumn(  # +60: epoch-0 rows are "late", see above
         "ts", F.timestamp_seconds(F.col("doc_id") % 600 + 60)
@@ -5878,15 +5870,12 @@ def q_streaming_neardup_minhash(spark, sf_dir):
         n_hashes=16, bands=1, shingle_n=3,
     )
     qname = f"oracle_neardup_mh_{uuid.uuid4().hex[:8]}"
-    n_state = input_sized_state_partitions(  # guide §2.2, see above
-        spark, f"{sf_dir}/documents.parquet", floor=1)
-    with scoped_shuffle_partitions(spark, n_state):
-        q = (
-            out.writeStream.format("memory").queryName(qname)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    surv = spark.table(qname)
+    q = (
+        out.writeStream.format("memory").queryName(qname)
+        .outputMode("append").trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    surv = child.table(qname)
     sig = minhash_expr(F.col("text"), n_hashes=16, shingle_n=3)
     return surv.select(
         *[sig[j].alias(f"sig{j}") for j in range(16)]

@@ -162,33 +162,32 @@ def bench_streaming(spark, sf_dir: str) -> int:
     from pyspark.sql import functions as F
 
     from lotus_spark.streaming.ops import (
-        input_sized_state_partitions,
         read_parquet_stream,
-        scoped_shuffle_partitions,
+        state_sized_session,
         windowed_doc_stats,
     )
 
+    # the stream's own session, its state-partition count derived from
+    # the input, same as the oracle row (q_streaming_doc_stats): every
+    # micro-batch commits every state partition, so the count must
+    # track data, not cores (guide §2.2)
+    child = state_sized_session(
+        spark, f"{sf_dir}/documents.parquet", floor=1)
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = read_parquet_stream(
-        spark, sf_dir, schema, glob="documents.parquet"
+        child, sf_dir, schema, glob="documents.parquet"
     )
     stream = stream.withColumn(
         "ts", F.timestamp_seconds(F.col("doc_id") % 600)
     )
     stats = windowed_doc_stats(stream, "text", "ts", window="1 minute")
     qname = f"bench_stream_{uuid.uuid4().hex[:8]}"
-    # input-derived state-partition count, same as the oracle row
-    # (q_streaming_doc_stats): every micro-batch commits every state
-    # partition, so the count must track data, not cores (guide §2.2)
-    n_state = input_sized_state_partitions(
-        spark, f"{sf_dir}/documents.parquet", floor=1)
-    with scoped_shuffle_partitions(spark, n_state):
-        q = (
-            stats.writeStream.format("memory").queryName(qname)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(qname).count()
+    q = (
+        stats.writeStream.format("memory").queryName(qname)
+        .outputMode("complete").trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    return child.table(qname).count()
 
 
 _PROBE_INDEX: dict = {}

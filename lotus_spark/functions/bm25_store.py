@@ -13,12 +13,13 @@ Layout (the inverted-list idea expressed as parquet partitioning):
 
 - ``{path}/postings`` — one row per (term, doc): ``(term, id, tf, dl)``
   written ``partitionBy(bucket)`` where ``bucket = pmod(xxhash64(term),
-  n_buckets)``. The doc length ``dl`` is DENORMALIZED into the posting
-  (computed map-side before the explode), so scoring never joins the
-  doc-lengths table — a query touches |query terms| buckets' worth of
-  postings and NOTHING else. Partition pruning is the inverted-list
-  lookup, done by the storage layer (same trick as the IVF-PQ cell
-  layout).
+  n_buckets)`` (:func:`_bucket_sql`; a query's terms fold to their
+  bucket ids in the plan, so building a query launches no job). The
+  doc length ``dl`` is DENORMALIZED into the posting (computed map-side
+  before the explode), so scoring never joins the doc-lengths table —
+  a query touches |query terms| buckets' worth of postings and NOTHING
+  else. Partition pruning is the inverted-list lookup, done by the
+  storage layer (same trick as the IVF-PQ cell layout).
 - ``{path}/termdf`` — ``(term, df)``, bucket-partitioned the same way
   (vocabulary-sized; rewritten on append since term frequencies change).
 - ``{path}/doclens`` — ``(id, dl)``: maintenance-only (append overlap
@@ -61,6 +62,18 @@ from lotus_spark.functions.text import tokens
 _META = "_bm25_meta.json"
 
 
+def _bucket_sql(term_sql: str, n_buckets: int) -> str:
+    """SQL text of the bucket a term's postings live in — the ONE
+    statement of the rule, shared by the writer (:func:`_encode`, over
+    the ``term`` column) and the reader (:func:`_scored_hits`, over a
+    quoted query term). A reader's terms are literals, so Catalyst
+    folds each ``pmod(xxhash64('<term>'), n)`` to its bucket id before
+    partition pruning: the scan's PartitionFilters hold plain integers
+    (pinned in tests/test_bm25_store.py), computed by the same JVM hash
+    that placed the postings, with no job."""
+    return f"pmod(xxhash64({term_sql}), {int(n_buckets)})"
+
+
 def _encode(df: DataFrame, text_col: str, id_col: str,
             n_buckets: int) -> tuple[DataFrame, DataFrame]:
     """(postings, doclens) for ``df`` — the single encode definition
@@ -79,8 +92,7 @@ def _encode(df: DataFrame, text_col: str, id_col: str,
     postings = (
         base.select("id", "dl", F.explode("__toks").alias("term"))
         .groupBy("term", "id", "dl").agg(F.count("*").alias("tf"))
-        .withColumn("bucket",
-                    F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
+        .withColumn("bucket", F.expr(_bucket_sql("term", n_buckets)))
         .select("term", "id", "tf", "dl", "bucket")
     )
     doclens = base.select("id", "dl")
@@ -203,44 +215,21 @@ def _bm25_partial_sql(n: float, avgdl: float, k1: float, b: float) -> str:
     return f"CAST(round({partial}, 9) AS DECIMAL(28,10))"
 
 
-_BUCKET_CACHE: dict[tuple[str, int], int] = {}
-_BUCKET_CACHE_MAX = 1_000_000  # entries; a serving vocabulary bound
-
-
-def _term_buckets(spark, terms: list[str], n_buckets: int) -> list[int]:
-    """Bucket ids for the query terms via the SAME JVM xxhash64 the
-    writer used (one tiny local job — driver-side replication of
-    Spark's hash would be a parity bug waiting to happen). The
-    (term, n_buckets) → bucket mapping is a pure deterministic hash, so
-    it caches process-wide: a serving process answering many queries
-    over a shared vocabulary pays the mini-job only for never-seen
-    terms (r11 verdict: ~1.4s fixed per-query overhead at sf0.1,
-    amortized — BENCH_bm25.json stored_query_warm)."""
-    if len(_BUCKET_CACHE) > _BUCKET_CACHE_MAX:
-        _BUCKET_CACHE.clear()  # unbounded vocab: reset, never grow past
-    missing = sorted({t for t in terms
-                      if (t, n_buckets) not in _BUCKET_CACHE})
-    if missing:
-        df = spark.createDataFrame([(t,) for t in missing], "term string")
-        for r in df.select(
-            "term",
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets)).alias("b"),
-        ).collect():
-            _BUCKET_CACHE[(r["term"], n_buckets)] = int(r["b"])
-    return sorted({_BUCKET_CACHE[(t, n_buckets)] for t in terms})
-
-
 def _scored_hits(spark, path: str, meta: dict, terms: list[str],
                  k1: float, b: float) -> DataFrame:
     """The postings of ``terms`` with their Okapi partial ``p``: the
-    terms' buckets prune the postings scan (PartitionFilters — pinned in
-    tests/test_plan_shapes.py), the term IN-filter pushes into it, term
+    terms' buckets (:func:`_bucket_sql`, folded to literals by Catalyst)
+    prune the postings scan (PartitionFilters — pinned in
+    tests/test_bm25_store.py), the term IN-filter pushes into it, term
     df joins as a broadcast, N/avgdl fold in as sidecar literals. Shared
-    by the single and the batched search, so both score identically."""
+    by the single and the batched search, so both score identically.
+    Building the frame launches no job."""
     from lotus_spark.functions.ann import _sql_in, _sql_str
 
-    buckets = _term_buckets(spark, terms, meta["n_buckets"])
-    where = F.expr(f"{_sql_in('bucket', buckets)}"
+    def bucket(t: str) -> str:
+        return _bucket_sql(_sql_str(t), meta["n_buckets"])
+
+    where = F.expr(f"{_sql_in('bucket', terms, bucket)}"
                    f" AND {_sql_in('term', terms, _sql_str)}")
     posts = _read_index_table(spark, path, "postings", meta).filter(where)
     tdf = (_read_index_table(spark, path, "termdf", meta).filter(where)
@@ -304,8 +293,8 @@ def bm25_search_index_batch(
     the single call returns an empty frame).
 
     Why batch: the single-query path's wall at serving time is dominated
-    by FIXED per-job overhead (bucket lookup + postings read + termdf
-    broadcast + top-k — several small Spark jobs per query,
+    by FIXED per-job overhead (postings read + termdf broadcast +
+    top-k — several small Spark jobs per query,
     BENCH_serving.json), not by the bounded bytes it reads. Concurrent
     queries' bucket sets overlap (popular terms), so one scan of the
     bucket UNION serves the whole batch: each posting row fans out to

@@ -21,9 +21,7 @@ checkpointed by the engine. Dedup state is bounded by the watermark via
 
 from __future__ import annotations
 
-import contextlib
 import math
-import os
 from typing import Any, Iterator, Optional, Tuple
 
 import pandas as pd
@@ -69,16 +67,28 @@ def _require_streaming(df: DataFrame, op: str) -> None:
                          f"use the batch operator for batch inputs")
 
 
-def input_sized_state_partitions(
+def state_sized_session(
     spark: SparkSession,
     *paths: str,
     target_bytes: int = 32 << 20,
     floor: int | None = None,
     cap: int = 8192,
-) -> int:
-    """Data-derived state-store / shuffle partition count for a streaming
-    query over file sources (optimization guide §2.2: size shuffle
-    partitions to the data, never to the core count).
+) -> SparkSession:
+    """A child session of ``spark`` to build, start and read ONE stateful
+    stream on, with its state-store / shuffle partition count derived
+    from the stream's input (optimization guide §2.2: size shuffle
+    partitions to the data, never to the core count). Build the source
+    (``read_parquet_stream(child, ...)``), start the sink and read a
+    memory sink (``child.table(name)``) all on the returned session.
+
+    ``spark.newSession()`` shares the SparkContext and the cache manager
+    but owns its SQL conf and temp views, so the caller's session is
+    never written: a batch query another thread plans on it while the
+    stream starts keeps its own partition count, and the memory sink's
+    view lives on the child only. A new session starts from the
+    SparkContext's conf, dropping what the caller set at runtime (its
+    time zone, say), so every modifiable SQL conf that differs is
+    copied over first.
 
     Structured Streaming pins ``spark.sql.shuffle.partitions`` at first
     query start as the state-store partition count for the checkpoint's
@@ -89,11 +99,12 @@ def input_sized_state_partitions(
     commit overhead on small per-trigger inputs: the 8-core bench run was
     measurably FASTER than the 32-core run on every stateful row
     (PERF_r14 scaling block, ratios 0.42-0.76). One partition per
-    ``target_bytes`` of per-trigger input bytes keeps the commit count
+    ``target_bytes`` of the bytes under ``paths`` keeps the commit count
     proportional to data — the same scale-adaptive sizing pattern as
     ``kmeans._bound_train_partitions`` — while the map-side work (the
     expensive fingerprint/token expressions run BEFORE the state
-    exchange) keeps its scan/repartition parallelism.
+    exchange) keeps its scan/repartition parallelism. ``cap`` bounds
+    the derived count; missing paths count zero bytes.
 
     ``floor`` picks the small-input regime by the state operator's
     per-partition COMPUTE, not its commit cost (measured sweep at sf0.1,
@@ -108,14 +119,7 @@ def input_sized_state_partitions(
     commit overhead (streaming_neardup measured 2.0s at 1 vs 3.0s at 8)
     and the expensive fingerprint expressions run map-side BEFORE the
     state exchange anyway.
-
-    ``LOTUS_STREAM_STATE_PARTITIONS`` overrides the derivation outright —
-    the production pin for deployments that know their steady-state key
-    cardinality; ``floor``/``cap`` bound the derived count.
     """
-    env = os.environ.get("LOTUS_STREAM_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
     if floor is None:
         floor = max(1, min(8, spark.sparkContext.defaultParallelism))
     jvm = spark._jvm
@@ -127,31 +131,18 @@ def input_sized_state_partitions(
         if fs.exists(hp):
             total += int(fs.getContentSummary(hp).getLength())
     derived = math.ceil(total / target_bytes) if total else floor
-    return max(floor, min(cap, derived))
 
-
-@contextlib.contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Set ``spark.sql.shuffle.partitions`` for the duration of one
-    streaming query's start→awaitTermination window, restoring the
-    caller's value after. The conf is read once at query start (it pins
-    the state-store partition count into the checkpoint), so the scope
-    only needs to cover ``.start()``; wrapping the whole drain keeps the
-    restore exception-safe.
-
-    Session-global, NOT thread-local: any OTHER query planned in this
-    session while the scope is open (a batch job on another driver
-    thread, a second stream's start) silently inherits the shrunk count
-    — possibly 1 — and serializes its shuffles. Every call site in this
-    package drains its query synchronously inside the scope; keep that
-    single-planner discipline, or pin the other query's partitioning
-    explicitly (repartition / its own scope) before overlapping."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(int(n)))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    child = spark.newSession()
+    mine, theirs = spark.conf.getAll, child.conf.getAll
+    for k in set(mine) | set(theirs):
+        if mine.get(k) != theirs.get(k) and spark.conf.isModifiable(k):
+            if k in mine:
+                child.conf.set(k, mine[k])
+            else:
+                child.conf.unset(k)
+    child.conf.set("spark.sql.shuffle.partitions",
+                   str(max(floor, min(cap, derived))))
+    return child
 
 
 def sem_map_stream(

@@ -1,6 +1,14 @@
+import os
+
 import pytest
 
 from lotus_spark.session import get_spark
+
+# a bounded driver heap, set before the first session launches the JVM:
+# get_spark asks for 48g, under which G1 rarely collects and the suite's
+# JVM grows until a small host kills it. A caller's own setting wins.
+os.environ.setdefault("PYSPARK_SUBMIT_ARGS",
+                      "--driver-memory 3g pyspark-shell")
 
 
 def _session():

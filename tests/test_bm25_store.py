@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from lotus_spark.functions.bm25_store import (
     append_bm25_index,
     bm25_search_index,
+    bm25_search_index_batch,
     read_bm25_meta,
     write_bm25_index,
 )
@@ -173,15 +174,42 @@ def test_partial_append_fails_loudly_and_delete_heals(spark, tmp_path):
 
 def test_search_scan_prunes_to_query_term_buckets(spark, tmp_path):
     """The postings read is partition-pruned to the query terms'
-    buckets — the inverted-list lookup done by the storage layer."""
+    buckets — the inverted-list lookup done by the storage layer. The
+    bucket rule reaches the scan folded to integer literals, the ids
+    the writer placed the terms' postings under."""
+    import re
+
     from tests.test_plan_shapes import formatted_plan
 
     docs = _docs(spark)
     path = str(tmp_path / "bm")
     write_bm25_index(docs, path, "text", "doc_id", n_buckets=8)
-    plan = formatted_plan(bm25_search_index(spark, path, "spark", k=3))
+    query = "spark window pasta"
+    plan = formatted_plan(bm25_search_index(spark, path, query, k=3))
     scan = plan[plan.index("Scan parquet"):]
-    assert "PartitionFilters" in scan and "bucket" in scan
+    pf = re.search(r"PartitionFilters: \[([^\]]*)\]", scan)
+    assert pf is not None and "bucket" in pf.group(1)
+    got = re.search(r"bucket#\d+ IN \(([\d,]+)\)", pf.group(1))
+    assert got is not None, pf.group(1)  # literals, no hash left
+    written = {r["bucket"] for r in spark.read.parquet(f"{path}/postings")
+               .filter(F.col("term").isin(query.split())).collect()}
+    assert {int(b) for b in got.group(1).split(",")} == written
+
+
+def test_search_build_launches_no_job(spark, tmp_path, spark_state):
+    """Building a lexical search launches no Spark job, for terms never
+    queried before in this process too: the term buckets are folded in
+    the plan, not looked up."""
+    import uuid
+
+    path = str(tmp_path / "bm")
+    write_bm25_index(_docs(spark), path, "text", "doc_id", n_buckets=8)
+    fresh = f"spark t{uuid.uuid4().hex}"
+    assert spark_state.jobs(
+        lambda: bm25_search_index(spark, path, fresh, k=3)) == 0
+    assert spark_state.jobs(lambda: bm25_search_index_batch(
+        spark, path, {"a": fresh, "b": f"join u{uuid.uuid4().hex}"},
+        k=3)) == 0
 
 
 def test_compact_preserves_rows_and_answers(spark, tmp_path):

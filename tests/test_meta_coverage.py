@@ -248,8 +248,6 @@ def test_no_module_level_mutable_registries():
     import ast
 
     allowed = {
-        # a pure term -> bucket memo: strings and ints, no frames
-        ("lotus_spark/functions/bm25_store.py", "_BUCKET_CACHE"),
         # UDF wrappers keyed by session, no frames
         ("lotus_spark/functions/vectors.py", "_UDF_CACHE"),
         # a plugin registry of search-engine callables, no frames

@@ -134,20 +134,40 @@ def test_hybrid_batch_matches_singles(spark, tmp_path):
 
 
 def test_hybrid_batch_runs_in_six_jobs(spark, tmp_path, spark_state):
-    """With the query terms' buckets cached, one batch submits at most
-    six Spark jobs whatever its size — the term-df broadcast, the
-    lexical exchange, the ADC exchange, the shortlist broadcast, the
-    rerank exchange and the result (AQE runs each exchange and each
-    broadcast as its own job)."""
+    """A batch submits at most six Spark jobs whatever its size — the
+    term-df broadcast, the lexical exchange, the ADC exchange, the
+    shortlist broadcast, the rerank exchange and the result (AQE runs
+    each exchange and each broadcast as its own job) — its FIRST time
+    too, with a term this process has never queried: the term buckets
+    are folded in the plan, so no lookup job precedes it."""
+    import uuid
+
     from lotus_spark.functions.serving import hybrid_search_index_batch
 
     bm_path, iv_path, vecs = build_indexes(spark, tmp_path)
     knobs = dict(k=6, lexical_k=5, vector_k=5, n_probe=2, rerank_k=8,
                  vector_id_col="doc_id")
-    hybrid_search_index_batch(  # puts the terms in the bucket cache
-        spark, bm_path, iv_path, batch_queries(vecs), **knobs).collect()
+    queries = batch_queries(vecs)
+    text, qv = queries["q0"]
+    queries["q0"] = (f"{text} t{uuid.uuid4().hex}", qv)
     assert spark_state.jobs(lambda: hybrid_search_index_batch(
-        spark, bm_path, iv_path, batch_queries(vecs), **knobs).collect()) <= 6
+        spark, bm_path, iv_path, queries, **knobs).collect()) <= 6
+
+
+def test_cold_hybrid_query_runs_in_four_jobs(spark, tmp_path, spark_state):
+    """One hybrid query with a term this process has never queried
+    submits four jobs — the term-df broadcast, the lexical top-k, the
+    ADC shortlist and the fused result — and no bucket lookup job."""
+    import uuid
+
+    from lotus_spark.functions.serving import hybrid_search_index
+
+    bm_path, iv_path, vecs = build_indexes(spark, tmp_path)
+    query = f"{QUERY} t{uuid.uuid4().hex}"
+    assert spark_state.jobs(lambda: hybrid_search_index(
+        spark, bm_path, iv_path, query, vecs[0], k=6, lexical_k=5,
+        vector_k=5, n_probe=2, rerank_k=8,
+        vector_id_col="doc_id").collect()) == 4
 
 
 def test_cluster_map_cdc_stability_and_sync(spark, tmp_path):

@@ -664,54 +664,87 @@ def test_cleanup_crashed_epoch_prefix_is_exact(spark, tmp_path):
     assert (idx / "_staging" / "batch-2" / "junk").exists()
 
 
-def test_input_sized_state_partitions(spark, tmp_path, monkeypatch):
+def test_input_sized_state_partitions(spark, tmp_path):
     """r15: the state-store partition count is derived from per-trigger
-    input bytes (one partition per target_bytes, floor/cap-clamped), and
-    the env pin overrides the derivation outright."""
-    from lotus_spark.streaming.ops import input_sized_state_partitions
+    input bytes (one partition per target_bytes, floor/cap-clamped) and
+    set on the stream's child session only."""
+    from lotus_spark.streaming.ops import state_sized_session
 
+    def n_state(*paths, **kw):
+        child = state_sized_session(spark, *paths, **kw)
+        return int(child.conf.get("spark.sql.shuffle.partitions"))
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
     src = tmp_path / "tiny.parquet"
     spark.range(10).coalesce(1).write.parquet(str(src))
-    monkeypatch.delenv("LOTUS_STREAM_STATE_PARTITIONS", raising=False)
     # a KB-scale file derives the floor, never the session core count:
     # floor=1 for O(1)-per-row state ops, default (None) = the compute
     # floor min(8, defaultParallelism) for O(rows) state operators
-    assert input_sized_state_partitions(spark, str(src), floor=1) == 1
+    assert n_state(str(src), floor=1) == 1
     compute_floor = max(1, min(8, spark.sparkContext.defaultParallelism))
-    assert input_sized_state_partitions(spark, str(src)) == compute_floor
+    assert n_state(str(src)) == compute_floor
     # one partition per target_bytes once input exceeds it
     n_bytes = sum(f.stat().st_size for f in src.rglob("*") if f.is_file())
     assert n_bytes > 64  # sanity: the parquet footer alone exceeds this
-    got = input_sized_state_partitions(spark, str(src), target_bytes=64,
-                                       floor=1)
+    got = n_state(str(src), target_bytes=64, floor=1)
     import math
 
     assert got == min(8192, math.ceil(n_bytes / 64))
     # cap clamps the derivation
-    assert input_sized_state_partitions(
-        spark, str(src), target_bytes=1, cap=16) == 16
+    assert n_state(str(src), target_bytes=1, cap=16) == 16
     # a missing path contributes nothing (derives the floor)
-    assert input_sized_state_partitions(
-        spark, str(tmp_path / "absent.parquet"), floor=1) == 1
-    # env pin wins over everything
-    monkeypatch.setenv("LOTUS_STREAM_STATE_PARTITIONS", "7")
-    assert input_sized_state_partitions(spark, str(src)) == 7
-
-
-def test_scoped_shuffle_partitions_restores(spark):
-    """The scope restores the session's shuffle-partition conf on exit,
-    including the exception path — a leaked shrink would silently
-    de-parallelize every later batch query in the session."""
-    from lotus_spark.streaming.ops import scoped_shuffle_partitions
-
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    with scoped_shuffle_partitions(spark, 3):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert n_state(str(tmp_path / "absent.parquet"), floor=1) == 1
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    with pytest.raises(RuntimeError, match="boom"):
-        with scoped_shuffle_partitions(spark, 5):
-            raise RuntimeError("boom")
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_state_sized_session_leaves_the_caller_session_alone(
+        spark, stream_dir):
+    """A stateful stream started on its child session runs with the
+    input-sized state partitions, while a batch query planned on the
+    CALLER's session during the stream (from its foreachBatch) keeps the
+    caller's partition count; a time zone the caller set at runtime
+    reaches the stream; the memory sink's view is the child's only."""
+    import re
+
+    from lotus_spark.streaming.ops import state_sized_session
+
+    mine = spark.conf.get("spark.sql.shuffle.partitions")
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    seen = {}
+
+    def plan_on_caller(batch_df, _epoch):
+        plan = (spark.range(100).repartition("id")._jdf.queryExecution()
+                .executedPlan().toString())
+        seen["caller"] = re.search(r"hashpartitioning\(id#\d+L?, (\d+)\)",
+                                   plan).group(1)
+        seen["conf"] = spark.conf.get("spark.sql.shuffle.partitions")
+        # consume every partition: the state stores commit only then
+        seen.setdefault("tz", set()).update(
+            r["tz"] for r in batch_df.collect())
+
+    try:
+        child = state_sized_session(spark, stream_dir, floor=1)
+        stream = read_parquet_stream(child, stream_dir, SCHEMA)
+        out = streaming_dedup(stream, ["body"], "ts").select(
+            "body", F.current_timezone().alias("tz"))
+        q = (out.writeStream.foreachBatch(plan_on_caller)
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        state_ops = [
+            n for n in q.lastProgress["stateOperators"]
+            if n.get("numShufflePartitions") is not None]
+        assert state_ops and all(
+            n["numShufflePartitions"] == 1 for n in state_ops)
+        assert seen == {"caller": mine, "conf": mine,
+                        "tz": {"America/New_York"}}
+
+        table = _run(child, out, "t_child_view")
+        assert table.count() == 3
+        assert not spark.catalog.tableExists("t_child_view")
+        assert child.conf.get("spark.sql.shuffle.partitions") == "1"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
 
 
 def test_streaming_dedup_state_partition_invariance(spark, stream_dir):
@@ -719,14 +752,14 @@ def test_streaming_dedup_state_partition_invariance(spark, stream_dir):
     and 8 state partitions (the r15 input-derived sizing must be free to
     pick either): partitioning moves keys between state stores, never
     changes which keys exist."""
-    from lotus_spark.streaming.ops import scoped_shuffle_partitions
+    from lotus_spark.streaming.ops import state_sized_session
 
     got = {}
     for n in (1, 8):
-        stream = read_parquet_stream(spark, stream_dir, SCHEMA)
+        child = state_sized_session(spark, stream_dir, floor=n, cap=n)
+        stream = read_parquet_stream(child, stream_dir, SCHEMA)
         out = streaming_dedup(stream, ["body"], "ts")
-        with scoped_shuffle_partitions(spark, n):
-            table = _run(spark, out.select("body"), f"t_sp{n}")
+        table = _run(child, out.select("body"), f"t_sp{n}")
         got[n] = sorted(r["body"] for r in table.collect())
     assert got[1] == got[8]
     assert len(got[1]) == 3  # the exact-dup pair collapsed

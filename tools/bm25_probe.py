@@ -82,8 +82,9 @@ def main() -> None:
     out = {"metric": "bm25_probe", "unit": "sec", "scales": {}}
     work = tempfile.mkdtemp(prefix="bm25_probe_")
     try:
+        from lotus_spark.functions.ann import _sql_str
         from lotus_spark.functions.bm25_store import (
-            _term_buckets, read_bm25_meta,
+            _bucket_sql, read_bm25_meta,
         )
 
         def _du(path_str: str) -> int:
@@ -104,20 +105,12 @@ def main() -> None:
             write_bm25_index(docs, path, "text", "doc_id", n_buckets=64)
             build = round(time.time() - t0, 3)
 
-            from lotus_spark.functions import bm25_store as _bs
-
-            best_idx = best_hand = best_warm = float("inf")
+            best_idx = best_hand = float("inf")
             got = want = None
             for _ in range(2):  # interleaved sweeps
-                _bs._BUCKET_CACHE.clear()  # cold: pays the bucket job
                 t0 = time.time()
                 got = bm25_search_index(spark, path, QUERY, k=10).collect()
                 best_idx = min(best_idx, time.time() - t0)
-                # warm repeat (r12): the term->bucket cache holds the
-                # vocabulary, so the serving path skips the mini-job
-                t0 = time.time()
-                bm25_search_index(spark, path, QUERY, k=10).collect()
-                best_warm = min(best_warm, time.time() - t0)
                 t0 = time.time()
                 want = bm25_search(docs, "text", "doc_id", QUERY,
                                    k=10).collect()
@@ -127,13 +120,15 @@ def main() -> None:
 
             meta = read_bm25_meta(spark, path)
             terms = sorted(set(QUERY.split()))
-            buckets = _term_buckets(spark, terms, meta["n_buckets"])
+            # the writer's bucket rule, evaluated by the same JVM hash
+            buckets = set(spark.sql("SELECT " + ", ".join(
+                _bucket_sql(_sql_str(t), meta["n_buckets"])
+                for t in terms)).first())
             pruned_bytes = sum(
                 _du(f"{path}/postings/bucket={b}") for b in buckets)
             out["scales"][str(scale)] = {
                 "build": build,
                 "stored_query": round(best_idx, 3),
-                "stored_query_warm": round(best_warm, 3),
                 "inhand_query": round(best_hand, 3),
                 "stored_read_mb": round(pruned_bytes / 1e6, 2),
                 "inhand_read_mb": round(_du(corpus) / 1e6, 2),

@@ -6,12 +6,13 @@ re-ranks the full embedding table per query?
 Two axes, because one is hardware-honest and one is design-honest
 (same split as BENCH_bm25.json):
 
-- WALL, cold vs warm: the stored path's steady state is the WARM
-  number (term-bucket cache populated). At sf0.1 (50k docs) on an idle
-  32-core box the stored path's fixed per-job overhead (several small
-  jobs: bucket lookup, postings read, cell probes, rerank) EXCEEDS the
-  page-cached in-hand scan — recorded as-is; walls at small scale do
-  not separate the designs (BENCH_bm25 measured the same at 10x).
+- WALL: every stored query takes the same path (the query terms'
+  buckets fold into the plan, so a never-seen term costs no extra
+  job). At sf0.1 (50k docs) on an idle 32-core box the stored path's
+  fixed per-job overhead (several small jobs: postings read, cell
+  probes, rerank) EXCEEDS the page-cached in-hand scan — recorded
+  as-is; walls at small scale do not separate the designs (BENCH_bm25
+  measured the same at 10x).
 - BYTES per query: the stored path reads its query terms' postings
   buckets + termdf/doclens + the n_probe probed cell directories +
   KB sidecars; the in-hand plan reads documents.parquet AND
@@ -21,14 +22,15 @@ Two axes, because one is hardware-honest and one is design-honest
 
 Protocol: build both stores once (wall recorded), one unmeasured warm
 query, then 3 interleaved rounds over 6 distinct corpus-derived
-queries (round 0 after a term-bucket cache clear = cold; rounds 1-2 =
-warm). In-hand contrast: same queries, 2 rounds, min per query.
+queries, min per query. In-hand contrast: same queries, 2 rounds, min
+per query.
 
 BATCH AMORTIZATION (r14): the single-query stored wall is dominated by
 FIXED per-query job overhead (several small Spark jobs per query) —
 exactly what a deployment amortizes by batching its query traffic.
-``hybrid_search_index_batch`` answers Q queries in three jobs (one
-bucket-union lexical pass, one cell-union ADC pass, one fusion); the
+``hybrid_search_index_batch`` answers Q queries in six jobs (one
+bucket-union lexical pass, one cell-union ADC pass, the rerank and the
+fusion); the
 probe times batches of Q = 1/2/3/6 over the same 6 queries (3 repeats,
 min) and records wall-per-query vs Q — the row the r13 verdict asked
 for ("amortize the per-query job overhead across a query batch").
@@ -73,8 +75,9 @@ def main() -> None:
         write_ivfpq_index,
     )
     from lotus_spark.functions.bm25 import bm25_search, rrf_fuse
+    from lotus_spark.functions.ann import _sql_str
     from lotus_spark.functions.bm25_store import (
-        _BUCKET_CACHE, _term_buckets, read_bm25_meta, write_bm25_index,
+        _bucket_sql, read_bm25_meta, write_bm25_index,
     )
     from lotus_spark.functions.serving import hybrid_search_index
     from lotus_spark.session import get_spark
@@ -127,13 +130,10 @@ def main() -> None:
             return time.time() - t
 
         stored_one(0)  # unmeasured warm: JVM/codegen one-time costs
-        _BUCKET_CACHE.clear()
-        cold: list[float] = []
-        warm: dict[int, list[float]] = {i: [] for i in range(N_QUERIES)}
-        for rnd in range(3):
+        stored: dict[int, list[float]] = {i: [] for i in range(N_QUERIES)}
+        for _rnd in range(3):
             for i in range(N_QUERIES):
-                dt = stored_one(i)
-                (cold.append(dt) if rnd == 0 else warm[i].append(dt))
+                stored[i].append(stored_one(i))
 
         def inhand_one(i: int) -> float:
             t = time.time()
@@ -182,7 +182,10 @@ def main() -> None:
         stored_bytes = []
         for i in range(N_QUERIES):
             terms = sorted(set(qtexts[i].split()))
-            buckets = _term_buckets(spark, terms, meta["n_buckets"])
+            # the writer's bucket rule, evaluated by the same JVM hash
+            buckets = set(spark.sql("SELECT " + ", ".join(
+                _bucket_sql(_sql_str(t), meta["n_buckets"])
+                for t in terms)).first())
             b = sum(_du(f"{bm_path}/postings/bucket={bk}")
                     + _du(f"{bm_path}/termdf/bucket={bk}")
                     for bk in buckets)
@@ -194,12 +197,11 @@ def main() -> None:
         inhand_bytes = (_du(f"{sf_dir}/documents.parquet")
                         + _du(f"{sf_dir}/embeddings.parquet"))
 
-        warm_mins = sorted(round(min(v), 3) for v in warm.values())
+        stored_mins = sorted(round(min(v), 3) for v in stored.values())
         inhand_mins = sorted(round(min(v), 3) for v in inhand.values())
         rec.update({
-            "stored_cold_per_query": sorted(round(x, 3) for x in cold),
-            "stored_warm_min_per_query": warm_mins,
-            "stored_warm_median": warm_mins[len(warm_mins) // 2],
+            "stored_min_per_query": stored_mins,
+            "stored_median": stored_mins[len(stored_mins) // 2],
             "inhand_min_per_query": inhand_mins,
             "inhand_median": inhand_mins[len(inhand_mins) // 2],
             "stored_read_mb_per_query": sorted(
@@ -214,8 +216,7 @@ def main() -> None:
             # read stays geometry-bounded; the fixed job overhead is
             # paid once per BATCH instead of once per query.
             "stored_batch_by_q": batch_rows,
-            "note": ("warm = term-bucket cache populated (the serving "
-                     "steady state). At sf0.1 on an idle 32-core box the "
+            "note": ("At sf0.1 on an idle 32-core box the "
                      "stored path's fixed multi-job overhead exceeds the "
                      "page-cached in-hand scan — walls do NOT separate "
                      "the designs at small scale (BENCH_bm25 measured "
